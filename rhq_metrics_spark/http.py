@@ -133,7 +133,7 @@ from rhq_metrics_spark.service import (
     bucket_points_json,
     named_data_points_json,
 )
-from rhq_metrics_spark.sources.wire import parse_wire
+from rhq_metrics_spark.sources.wire import decode_wire_body, parse_wire
 
 _STATUS_TEXT = {
     200: "200 OK", 201: "201 Created", 204: "204 No Content",
@@ -576,18 +576,24 @@ class MetricsApp:
         if metric_id is not None:
             # POST /{type}s/{id}/raw: body is the data-point list
             body = [{"id": metric_id, "data": body}]
-        lines = local_df(
-            self.service.spark, [(json.dumps(m),) for m in body], "value string"
-        )
-        points, rejects = parse_wire(
-            lines, metric_type, default_tenant=tenant
-        )
-        bad = rejects.limit(1).collect()
-        if bad:
-            raise BadRequest(
-                f"Invalid metric payload ({bad[0]['reason']}): "
-                f"{bad[0]['_raw'][:200]}"
+        # a canonical body decodes on the driver into one Arrow table the
+        # store writes without a Spark job; anything else takes the Spark
+        # parse, which also words every error response
+        points = decode_wire_body(body, metric_type, default_tenant=tenant)
+        if points is None:
+            lines = local_df(
+                self.service.spark, [(json.dumps(m),) for m in body],
+                "value string",
             )
+            points, rejects = parse_wire(
+                lines, metric_type, default_tenant=tenant
+            )
+            bad = rejects.limit(1).collect()
+            if bad:
+                raise BadRequest(
+                    f"Invalid metric payload ({bad[0]['reason']}): "
+                    f"{bad[0]['_raw'][:200]}"
+                )
         with api_errors():
             self.service.add_data_points(metric_type, points)
         return 200, None

@@ -256,6 +256,20 @@ SCHEMAS = {
     MetricType.STRING: STRING_SCHEMA,
 }
 
+
+def arrow_point_schema(metric_type: str):
+    """Arrow twin of ``SCHEMAS[metric_type]`` with every field nullable:
+    the columns the REST decoder builds and the driver-side L0 writer
+    stores (a null value is kept, as in the Spark parse)."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_type
+
+    return pa.schema(
+        [pa.field(f.name, to_arrow_type(f.dataType))
+         for f in SCHEMAS[metric_type].fields]
+    )
+
+
 METRICS_IDX_SCHEMA = StructType(
     [
         StructField("tenant_id", StringType(), False),

@@ -22,6 +22,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
 
 from rhq_metrics_spark.operators.stats import _stat_aggs
+from rhq_metrics_spark.tags.compiler import full_match
 
 
 def tag_predicate(tags_col: Column, key: str, pattern: str) -> Column:
@@ -32,8 +33,7 @@ def tag_predicate(tags_col: Column, key: str, pattern: str) -> Column:
     negated = pattern.startswith("!")
     if negated:
         pattern = pattern[1:]
-    # Java matches() is full-match; Spark rlike is find() — anchor it.
-    matched = value.rlike(f"^(?:{pattern})$")
+    matched = full_match(value, pattern)
     return value.isNotNull() & (~matched if negated else matched)
 
 

@@ -26,9 +26,24 @@ Usage (set in :mod:`rhq_metrics_spark.session`)::
 
 The module must be importable on executors — it ships with the engine
 package, which a PySpark deployment distributes anyway.
+
+Fork safety: the daemon forks workers after these imports, and
+``fork()`` copies only the calling thread.  A BLAS library that has
+started its thread pool at import (OpenBLAS, OpenMP, MKL) would leave
+each child with pool state whose threads do not exist, and the child's
+first BLAS call can hang.  The module therefore pins
+``OPENBLAS_NUM_THREADS`` / ``OMP_NUM_THREADS`` / ``MKL_NUM_THREADS`` to
+``1`` before any import, so no pool threads exist at fork time; a value
+the deployment sets itself is left alone.  The assumption is that the
+daemon itself never runs numeric work — it only imports and forks.
 """
 
 from __future__ import annotations
+
+import os
+
+for _var in ("OPENBLAS_NUM_THREADS", "OMP_NUM_THREADS", "MKL_NUM_THREADS"):
+    os.environ.setdefault(_var, "1")
 
 # Preload the vectorized stack the engine's Arrow/pandas UDFs touch on
 # their first batch.  Failures must never break the daemon: fall back to

@@ -40,7 +40,7 @@ from rhq_metrics_spark.operators import (
 )
 from rhq_metrics_spark.operators.stats import percentile_col_name
 from rhq_metrics_spark.sources.store import MetricsStore
-from rhq_metrics_spark.tags import find_metric_ids
+from rhq_metrics_spark.tags import find_metric_ids, full_match
 
 
 from rhq_metrics_spark.sqltext import sql_str as _sql_str  # noqa: E402
@@ -269,7 +269,7 @@ class MetricsService:
             idx = idx.filter(F.col("type") == metric_type)
         names = idx.select(F.explode(F.map_keys("tags")).alias("tag"))
         if filter_regex:
-            names = names.filter(F.col("tag").rlike(f"^(?:{filter_regex})$"))
+            names = names.filter(full_match(F.col("tag"), filter_regex))
         return names.distinct()
 
     def get_tag_values(
@@ -299,7 +299,7 @@ class MetricsService:
         for name, pattern in tag_patterns.items():
             cond = F.col("tag") == name
             if pattern not in ("*", None):
-                cond = cond & F.col("value").rlike(f"^(?:{pattern})$")
+                cond = cond & full_match(F.col("value"), pattern)
             conds.append(cond)
         keep = conds[0]
         for c in conds[1:]:
@@ -371,19 +371,32 @@ class MetricsService:
     # -- ingest ---------------------------------------------------------------
 
     def add_data_points(
-        self, metric_type: str, df: DataFrame, max_string_size: int | None = 2048
+        self, metric_type: str, df, max_string_size: int | None = 2048
     ) -> None:
-        """S5 ingest.  For string metrics, applies the F7 size guard —
-        the reference rejects oversized string values at write time
-        (MetricsServiceImpl.java:196,330-334)."""
+        """S5 ingest of a DataFrame or a pyarrow Table of points (see
+        ``MetricsStore.add_data_points``).  For string metrics, applies
+        the F7 size guard — the reference rejects oversized string values
+        at write time (MetricsServiceImpl.java:196,330-334); a Table is
+        checked in Python, with no Spark job."""
         if metric_type == MetricType.STRING and max_string_size:
-            over = df.filter(F.length("value") > max_string_size).limit(1).collect()
+            if isinstance(df, DataFrame):
+                over = [
+                    r["metric"] for r in df.filter(
+                        F.length("value") > max_string_size
+                    ).limit(1).collect()
+                ]
+            else:
+                over = [
+                    m for m, v in zip(df["metric"].to_pylist(),
+                                      df["value"].to_pylist())
+                    if v is not None and len(v) > max_string_size
+                ]
             if over:
                 from rhq_metrics_spark.errors import BadRequest
 
                 raise BadRequest(
                     f"string metric value exceeds max size {max_string_size}: "
-                    f"metric={over[0]['metric']!r}"
+                    f"metric={over[0]!r}"
                 )
         self.store.add_data_points(metric_type, df)
 

@@ -30,7 +30,11 @@ Scale design:
   segment rename, so it is always present) records the exact distinct
   (slice, bucket) set — captured for free during the write via
   ``Dataset.observe`` — giving maintenance and the read path exact
-  slice pruning without listing or footer scans.
+  slice pruning without listing or footer scans.  A batch already in
+  driver memory (a decoded REST body, as a pyarrow Table) takes a
+  second writer: stamped and sorted in Python and written as one file
+  with pyarrow — no Spark job — into the same segment layout, sidecar
+  and commit path.
 - compaction folds closed slices from the L0 segments into the *cold*
   layout, which IS partitioned by ``date_slice`` (2h floor,
   DateTimeService.java:79-122) and a hashed ``tenant_bucket`` —
@@ -89,6 +93,7 @@ from rhq_metrics_spark.model import (
     TENANTS_SCHEMA,
     TWO_HOURS_MS,
     MetricType,
+    arrow_point_schema,
 )
 from rhq_metrics_spark.sources.manifest import ManifestLog, new_id
 
@@ -305,6 +310,30 @@ class MetricsStore:
             .withColumn("ingest_seq", F.lit(self._next_seq()))
         )
 
+    def _stamp_arrow(self, table, metric_type: str):
+        """:meth:`_stamp` for a pyarrow Table already in driver memory:
+        the same storage columns, computed in Python, cast to the types
+        a Spark-written segment carries."""
+        import pyarrow as pa
+
+        table = table.select(SCHEMAS[metric_type].fieldNames()).cast(
+            arrow_point_schema(metric_type)
+        )
+        # floor division, as in _stamp: negative epoch-millis land in the
+        # slice the read path computes
+        slices = table["ts"].to_numpy() // self.slice_ms * self.slice_ms
+        tenants = table["tenant_id"].combine_chunks().dictionary_encode()
+        buckets = pa.array(
+            [self._tenant_bucket_of(t) for t in tenants.dictionary.to_pylist()],
+            pa.int32(),
+        ).take(tenants.indices)
+        seq = pa.array([self._next_seq()] * table.num_rows, pa.int64())
+        return (
+            table.append_column("date_slice", pa.array(slices, pa.int64()))
+            .append_column("tenant_bucket", buckets)
+            .append_column("ingest_seq", seq)
+        )
+
     # A single L0 input partition larger than this (plan-estimated)
     # triggers a spreading shuffle; below it, natural partitioning wins.
     L0_SPREAD_BYTES_PER_TASK = 128 << 20
@@ -357,10 +386,12 @@ class MetricsStore:
         return stamped
 
     def _write_segment_staging(
-        self, stamped: DataFrame, staging: Path
+        self, stamped, staging: Path
     ) -> set[tuple[int, int]]:
-        """Write one immutable plain-parquet segment into ``staging``,
-        partitioned by :meth:`_l0_partitioned` (shuffle-free unless the
+        """Write one immutable plain-parquet segment into ``staging``
+        and return its exact (slice, bucket) set.  A stamped Arrow table
+        goes to :meth:`_write_arrow_segment`.  A DataFrame is written by
+        Spark, partitioned by :meth:`_l0_partitioned` (shuffle-free unless the
         batch arrives as few-but-huge partitions), then sorted within
         each partition: each file holds sorted
         (slice, bucket, metric, ts) RUNS, so parquet row-group min/max
@@ -373,6 +404,8 @@ class MetricsStore:
         ``Dataset.observe`` (an accumulator — no second scan, no
         driver-side data read); its size is bounded by
         #slices x #buckets, never by row count."""
+        if not isinstance(stamped, DataFrame):
+            return self._write_arrow_segment(stamped, staging)
         obs = Observation()
         n_tasks = self.spark.sparkContext.defaultParallelism
         (
@@ -395,6 +428,27 @@ class MetricsStore:
         return {
             (r["date_slice"], r["tenant_bucket"]) for r in obs.get["sb"]
         }
+
+    def _write_arrow_segment(self, stamped, staging: Path) -> set[tuple[int, int]]:
+        """Arrow twin of the Spark segment write: one file sorted by
+        (slice, bucket, metric, ts), written with pyarrow from the
+        driver — no Spark job, no ``_SUCCESS``/``.crc`` files.  Readers
+        see the same column names and types as a Spark-written
+        segment."""
+        import pyarrow.parquet as pq
+
+        if stamped.num_rows == 0:
+            return set()
+        staging.mkdir(parents=True, exist_ok=True)
+        pq.write_table(
+            stamped.sort_by([(c, "ascending") for c in
+                             ("date_slice", "tenant_bucket", "metric", "ts")]),
+            str(staging / f"part-00000-{uuid.uuid4()}.parquet"),
+            compression=self.l0_compression,
+        )
+        pairs = stamped.group_by(["date_slice", "tenant_bucket"]).aggregate([])
+        return set(zip(pairs["date_slice"].to_pylist(),
+                       pairs["tenant_bucket"].to_pylist()))
 
     def _publish_segment(
         self, staging: Path, root: Path, pairs: set[tuple[int, int]]
@@ -463,35 +517,33 @@ class MetricsStore:
         )
         return df.withColumn("_layer_seq", F.col("ingest_seq").cast("long"))
 
-    def add_data_points(self, metric_type: str, df: DataFrame) -> None:
+    def add_data_points(self, metric_type: str, df) -> None:
         """Batch ingest: write ONE immutable L0 segment (append; LWW
         applied at read).  No locks — publish is a single atomic rename,
-        so ingest never contends with maintenance or other writers."""
-        self._assert_not_pinned("add_data_points")
-        if self.manifest is not None:
-            return self._add_data_points_manifest(metric_type, df)
-        out = self._stamp(df)
-        staging = self.base / "_staging" / new_id("ingest")
-        pairs = self._write_segment_staging(out, staging)
-        self._publish_segment(
-            staging, self._points_path(metric_type, "hot"), pairs
-        )
+        so ingest never contends with maintenance or other writers.
 
-    def _add_data_points_manifest(self, metric_type: str, df: DataFrame) -> None:
-        """Manifest-mode ingest: stage one immutable segment (private dir
-        → no Spark `_temporary` collisions between concurrent writer
-        processes), atomically move it under the hot root, then
-        CAS-commit it into the manifest.  Readers resolve manifests, so
-        nothing is visible before the commit.  Slice pruning happens
-        manifest-side (segment selection by slice set) and file-side
-        (sorted-column min/max stats), the Iceberg model."""
-        out = self._stamp(df)
+        ``df`` is a DataFrame, or a ``pyarrow.Table`` of the same point
+        columns: rows already in driver memory (a REST body) are written
+        with pyarrow and run no Spark job.
+
+        Manifest mode stages the segment the same way (private dir → no
+        Spark ``_temporary`` collisions between concurrent writer
+        processes), moves it under the hot root, then CAS-commits it
+        into the manifest.  Readers resolve manifests, so nothing is
+        visible before the commit.  Slice pruning happens manifest-side
+        (segment selection by slice set) and file-side (sorted-column
+        min/max stats), the Iceberg model."""
+        self._assert_not_pinned("add_data_points")
+        stamped = (
+            self._stamp(df) if isinstance(df, DataFrame)
+            else self._stamp_arrow(df, metric_type)
+        )
         staging = self.base / "_staging" / new_id("ingest")
-        pairs = self._write_segment_staging(out, staging)
+        pairs = self._write_segment_staging(stamped, staging)
         seg = self._publish_segment(
             staging, self._points_path(metric_type, "hot"), pairs
         )
-        if seg is None:
+        if seg is None or self.manifest is None:
             return
         slices = sorted({p[0] for p in pairs})
 

@@ -5,8 +5,17 @@ The reference ingests ``POST /{type}s/raw`` bodies shaped
 "tags"}], "tenantId"}]`` (Metric.java:48-72, DataPoint.java:37-60) and
 emits the same shape from ``GET .../raw``.  This module is the Spark
 twin: JSON lines → canonical point rows and back, entirely with
-``from_json`` / ``to_json`` + explode — no Python in the parse path, so
-wire decode runs inside codegen and scales with the scan.
+``from_json`` / ``to_json`` + explode — streaming and file ingest run no
+Python in the parse path, so wire decode runs inside codegen and scales
+with the scan.
+
+A REST body is different: it is already decoded in driver memory, so
+:func:`decode_wire_body` turns it into an Arrow table on the driver (no
+Spark job) under :func:`parse_wire`'s rules.  It vouches only for
+canonical bodies — every field of the type the wire schema declares,
+with no value whose Spark coercion could differ from Python's — and
+returns ``None`` for anything else, which then takes :func:`parse_wire`
+unchanged.
 
 Malformed records are never silently dropped: parsing is PERMISSIVE
 with a corrupt-record column, and :func:`parse_wire` splits good rows
@@ -17,11 +26,13 @@ from rejects so the caller can route rejects to a dead-letter sink
 
 from __future__ import annotations
 
+import math
+
 import pyspark.sql.functions as F
 import pyspark.sql.types as T
 from pyspark.sql import DataFrame, SparkSession
 
-from rhq_metrics_spark.model import MetricType
+from rhq_metrics_spark.model import MetricType, arrow_point_schema
 
 _VALUE_TYPES = {
     MetricType.GAUGE: T.DoubleType(),
@@ -119,6 +130,97 @@ def parse_wire(
         )
     )
     return good, bad
+
+
+_INT32 = 1 << 31
+_INT64 = 1 << 63
+_EXACT_DOUBLE_INT = 1 << 53
+
+
+def _gauge_ok(v) -> bool:
+    # ints beyond 2^53 would round differently in Jackson and Python
+    if type(v) is int:
+        return -_EXACT_DOUBLE_INT <= v <= _EXACT_DOUBLE_INT
+    return type(v) is float and math.isfinite(v)
+
+
+# value checks per type; ``type(v) is`` rejects bools (an int subclass)
+_CANONICAL_VALUE = {
+    MetricType.GAUGE: _gauge_ok,
+    MetricType.COUNTER: lambda v: type(v) is int and -_INT64 <= v < _INT64,
+    MetricType.AVAILABILITY: lambda v: type(v) is str,
+    MetricType.STRING: lambda v: type(v) is str,
+}
+
+
+def _tags_ok(tags) -> bool:
+    return tags is None or (
+        type(tags) is dict and all(type(v) is str for v in tags.values())
+    )
+
+
+def decode_wire_body(body: list, metric_type: str, default_tenant: str = ""):
+    """Driver-side twin of :func:`parse_wire` for a REST body that
+    ``json.loads`` has already decoded (a list of wire metric objects):
+    a ``pyarrow.Table`` of the canonical ``(tenant_id, metric, ts, value,
+    tags)`` columns, with no Spark job.
+
+    Same rules as :func:`parse_wire`: ``tenantId`` falls back to
+    ``default_tenant``, point tags win over metric tags, points with a
+    null timestamp are dropped, null values are kept, unknown fields are
+    ignored.  Returns ``None`` for any body it cannot decode with
+    certainty — a record :func:`parse_wire` would reject (not an object,
+    no ``id`` or ``data``), or a field whose Spark coercion could differ
+    from Python's (a non-string id, tenant or tag; a bool, string or
+    float where an integer is expected; an out-of-range integer; a
+    non-finite gauge value) — so the caller routes it through
+    :func:`parse_wire` and the response is what the Spark parse makes of
+    it.
+    """
+    value_ok = _CANONICAL_VALUE.get(metric_type)
+    if value_ok is None:
+        return None
+    tenants, metrics, tss, values, tags = cols = ([], [], [], [], [])
+    for m in body:
+        # a "_corrupt_record" key fills the parse's corrupt-record column
+        if type(m) is not dict or "_corrupt_record" in m:
+            return None
+        mid, data, tenant = m.get("id"), m.get("data"), m.get("tenantId")
+        retention, mtags = m.get("dataRetention"), m.get("tags")
+        if not (
+            type(mid) is str and type(data) is list
+            and (tenant is None or type(tenant) is str) and _tags_ok(mtags)
+            and (retention is None
+                 or (type(retention) is int and -_INT32 <= retention < _INT32))
+        ):
+            return None
+        if tenant is None:
+            tenant = default_tenant
+        for p in data:
+            if type(p) is not dict:
+                return None
+            ts, v, ptags = p.get("timestamp"), p.get("value"), p.get("tags")
+            if not ((v is None or value_ok(v)) and _tags_ok(ptags)):
+                return None
+            if ts is None:
+                continue
+            if not (type(ts) is int and -_INT64 <= ts < _INT64):
+                return None
+            tenants.append(tenant)
+            metrics.append(mid)
+            tss.append(ts)
+            values.append(v)
+            tags.append(mtags if ptags is None else ptags)
+    import pyarrow as pa
+
+    schema = arrow_point_schema(metric_type)
+    try:
+        return pa.Table.from_arrays(
+            [pa.array(c, type=f.type) for c, f in zip(cols, schema)],
+            schema=schema,
+        )
+    except (pa.ArrowException, UnicodeError):  # e.g. a lone surrogate
+        return None
 
 
 def read_wire_jsonl(

@@ -2,6 +2,7 @@ from rhq_metrics_spark.tags.compiler import (
     compile_expression,
     compile_simple_query,
     find_metric_ids,
+    full_match,
 )
 from rhq_metrics_spark.tags.parser import parse_tag_query
 
@@ -9,5 +10,6 @@ __all__ = [
     "compile_expression",
     "compile_simple_query",
     "find_metric_ids",
+    "full_match",
     "parse_tag_query",
 ]

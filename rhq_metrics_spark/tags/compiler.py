@@ -40,11 +40,20 @@ from rhq_metrics_spark.tags.parser import And, Cmp, Exists, In, Or, parse_tag_qu
 _PLAIN_ALTERNATION_RE = re.compile(r"^[a-zA-Z_0-9.]+(\|[a-zA-Z_0-9.]+)+$")
 
 
-def _anchored(pattern: str) -> str:
-    """Java ``matches()`` is full-match; Spark ``rlike`` is find()."""
-    if pattern == "*":
-        pattern = ".*"
-    return f"^(?:{pattern})$"
+def full_match(value: Column, pattern: str) -> Column:
+    """Java ``matches()``: ``value`` full-matches the Java regex
+    ``pattern``.  Spark's regex functions use ``find()``, so the pattern
+    is anchored.  ``regexp_instr`` runs the same ``java.util.regex``
+    find as ``rlike`` but binds the pattern as a reference, where
+    ``rlike`` inlines a literal pattern into the generated code: each
+    new pattern would then compile a fresh whole-stage class, and a tag
+    query pays a Janino compile per request."""
+    return F.regexp_instr(value, F.lit(f"^(?:{pattern})$")) > 0
+
+
+def _wildcard(pattern: str) -> str:
+    """The reference's bare ``*`` pattern means any value."""
+    return ".*" if pattern == "*" else pattern
 
 
 def _regex_predicate(tags: Column, key: str, pattern: str) -> Column:
@@ -56,7 +65,7 @@ def _regex_predicate(tags: Column, key: str, pattern: str) -> Column:
     if _PLAIN_ALTERNATION_RE.match(pattern):
         matched = value.isin(*pattern.split("|"))
     else:
-        matched = value.rlike(_anchored(pattern))
+        matched = full_match(value, _wildcard(pattern))
     return value.isNotNull() & (~matched if negated else matched)
 
 
@@ -128,7 +137,7 @@ def find_metric_ids(
         df = df.filter(compile_simple_query(simple, tags_col))
     if id_regex:
         negated = id_regex.startswith("!")
-        pat = _anchored(id_regex[1:] if negated else id_regex)
-        m = F.col("metric").rlike(pat)
+        m = full_match(F.col("metric"),
+                       _wildcard(id_regex[1:] if negated else id_regex))
         df = df.filter(~m if negated else m)
     return df

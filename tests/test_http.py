@@ -170,6 +170,135 @@ def test_malformed_ingest_payload_is_400(app):
     assert code == 400 and "Invalid metric payload" in body["errorMsg"]
 
 
+def test_string_over_max_size_is_400(app):
+    # F7 size guard (MetricsServiceImpl.java:330-334) through REST
+    body = [{"id": "s-big", "data": [{"timestamp": 1, "value": "x" * 2049}]}]
+    code, out = call(app, "POST", f"{P}/strings/raw", body=body)
+    assert code == 400
+    assert out == {
+        "errorMsg": "string metric value exceeds max size 2048: metric='s-big'"
+    }
+    assert call(app, "GET", f"{P}/strings/s-big/raw?start=0&end=10")[0] == 204
+    body[0]["data"][0]["value"] = "x" * 2048
+    assert call(app, "POST", f"{P}/strings/raw", body=body)[0] == 200
+
+
+TS = 1_700_000_000_000
+
+
+def _pt(ts, value, **kw):
+    return {"timestamp": ts, "value": value, **kw}
+
+
+def _payload_error(reason, record):
+    return {"errorMsg": f"Invalid metric payload ({reason}): {json.dumps(record)}"}
+
+
+# (path segment, metric type, per-id route metric id, body, response) —
+# response None marks a canonical body that must decode on the driver
+_INGEST_PARITY = [
+    pytest.param("gauges", "gauge", None,
+                 [{"id": "a", "data": [_pt(TS, 1.5), _pt(TS + 1, 2.5)]}],
+                 None, id="default_tenant"),
+    pytest.param("gauges", "gauge", None,
+                 [{"id": "a", "tenantId": "t2", "dataRetention": 7, "extra": 1,
+                   "data": [_pt(TS, 1.5, extra=2)]},
+                  {"id": "a", "data": [_pt(TS, 3.5)]}],
+                 None, id="explicit_tenant_and_unknown_fields"),
+    pytest.param("gauges", "gauge", None,
+                 [{"id": "a", "tags": {"dc": "us"},
+                   "data": [_pt(TS, 1.0), _pt(TS + 1, 2.0, tags={"dc": "eu"}),
+                            _pt(TS + 2, 3.0, tags={})]}],
+                 None, id="metric_vs_point_tags"),
+    pytest.param("gauges", "gauge", None,
+                 [{"id": "a", "data": [_pt(None, 1.0), {"value": 2.0},
+                                       _pt(TS, 3.0)]}],
+                 None, id="null_timestamp_dropped"),
+    pytest.param("gauges", "gauge", None,
+                 [{"id": "a", "data": [_pt(TS, None), {"timestamp": TS + 1}]}],
+                 None, id="null_value_kept"),
+    pytest.param("gauges", "gauge", None,
+                 [{"id": "a", "data": [_pt(TS, 3), _pt(TS + 1, -2**53)]}],
+                 None, id="int_gauge_value"),
+    pytest.param("gauges", "gauge", "g1", [_pt(TS, 1.0), _pt(TS + 1, 2.0)],
+                 None, id="per_id_route"),
+    pytest.param("counters", "counter", None,
+                 [{"id": "c", "data": [_pt(TS, 5), _pt(TS + 1, 2**62)]}],
+                 None, id="counter"),
+    pytest.param("availability", "availability", None,
+                 [{"id": "av", "data": [_pt(TS, "up"), _pt(TS + 1, "down")]}],
+                 None, id="availability"),
+    pytest.param("strings", "string", None,
+                 [{"id": "s", "data": [_pt(TS, "hello"), _pt(TS + 1, "Ω")]}],
+                 None, id="string"),
+    # non-canonical: the Spark parse answers, as it always has
+    pytest.param("gauges", "gauge", None, [{"id": 5, "data": [_pt(TS, 1.0)]}],
+                 (200, None), id="numeric_id"),
+    pytest.param("gauges", "gauge", None,
+                 [{"id": "g", "tags": {"k": 1}, "data": [_pt(TS, 1.0)]}],
+                 (200, None), id="non_string_tag"),
+    pytest.param("gauges", "gauge", None, [{"id": "g", "data": [_pt(TS, "1.5")]}],
+                 (400, _payload_error("malformed_json",
+                                      {"id": "g", "data": [_pt(TS, "1.5")]})),
+                 id="string_gauge_value"),
+    pytest.param("gauges", "gauge", None, [{"id": "g", "data": [_pt(1.5, 1.0)]}],
+                 (400, _payload_error("malformed_json",
+                                      {"id": "g", "data": [_pt(1.5, 1.0)]})),
+                 id="float_timestamp"),
+    pytest.param("gauges", "gauge", None, [{"id": "g", "data": [_pt(TS, True)]}],
+                 (400, _payload_error("malformed_json",
+                                      {"id": "g", "data": [_pt(TS, True)]})),
+                 id="bool_value"),
+    pytest.param("counters", "counter", None, [{"id": "c", "data": [_pt(TS, 1.5)]}],
+                 (400, _payload_error("malformed_json",
+                                      {"id": "c", "data": [_pt(TS, 1.5)]})),
+                 id="float_counter_value"),
+    pytest.param("gauges", "gauge", None, [{"data": [_pt(TS, 1.0)]}],
+                 (400, _payload_error("missing_id", {"data": [_pt(TS, 1.0)]})),
+                 id="missing_id"),
+    pytest.param("gauges", "gauge", None, [{"id": "g"}],
+                 (400, _payload_error("missing_data", {"id": "g"})),
+                 id="missing_data"),
+    pytest.param("gauges", "gauge", None, [{"id": "g", "data": []}, 7],
+                 (400, _payload_error("malformed_json", 7)),
+                 id="non_object_record"),
+]
+
+
+@pytest.mark.parametrize("seg,metric_type,metric_id,body,response", _INGEST_PARITY)
+def test_ingest_decode_matches_parse_wire(
+    spark, tmp_path, seg, metric_type, metric_id, body, response
+):
+    """A canonical POST body is decoded on the driver and stored with no
+    Spark job; it must store exactly the rows ``parse_wire`` yields.  Any
+    other body takes ``parse_wire`` itself, so its response (status and
+    ``errorMsg``) and stored rows stay what the Spark parse makes of it."""
+    from rhq_metrics_spark.localrel import local_df
+    from rhq_metrics_spark.sources.wire import decode_wire_body, parse_wire
+
+    svc = MetricsService(spark, MetricsStore(spark, str(tmp_path)))
+    path = f"{P}/{seg}/{metric_id}/raw" if metric_id else f"{P}/{seg}/raw"
+    records = [{"id": metric_id, "data": body}] if metric_id else body
+    decoded = decode_wire_body(records, metric_type, default_tenant="t1")
+    assert (decoded is not None) == (response is None)
+    code, out = call(MetricsApp(svc, base_path=P), "POST", path, body=body)
+    assert (code, out) == (response or (200, None))
+    if code != 200:
+        assert not svc.store._hot_segments(metric_type)
+        return
+
+    def rows(df):
+        return sorted(
+            (r["tenant_id"], r["metric"], r["ts"], r["value"],
+             None if r["tags"] is None else sorted(r["tags"].items()))
+            for r in df.collect()
+        )
+
+    lines = local_df(spark, [(json.dumps(m),) for m in records], "value string")
+    want, _ = parse_wire(lines, metric_type, default_tenant="t1")
+    assert rows(svc.store.points(metric_type)) == rows(want)
+
+
 def test_stats_param_validation_and_results(app):
     data = [{"id": "m-st", "data": [
         {"timestamp": t, "value": float(v)}

@@ -9,10 +9,13 @@ worker-init time on 32-task Python stages after a pool kill).
 
 from __future__ import annotations
 
+import os
 import subprocess
 import sys
 
 import pyspark.sql.functions as F
+
+_REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def test_session_uses_preloading_daemon(spark):
@@ -32,7 +35,7 @@ def test_pydaemon_module_preloads_vector_stack():
         "assert 'pyarrow' in sys.modules; "
         "assert callable(d.manager)"
     )
-    subprocess.run([sys.executable, "-c", code], check=True, cwd="/root/repo")
+    subprocess.run([sys.executable, "-c", code], check=True, cwd=_REPO)
 
 
 def test_arrow_udf_runs_through_preloaded_daemon(spark):
@@ -51,3 +54,28 @@ def test_arrow_udf_runs_through_preloaded_daemon(spark):
         .collect()
     )
     assert rows[0]["s"] == 2 * sum(range(100))
+
+
+def test_pydaemon_pins_blas_threads_before_fork():
+    # Fork safety: the daemon forks workers after importing numpy, so
+    # BLAS must not have started a thread pool.  Unset variables are
+    # pinned to 1; a value the deployment chose is left alone.
+    code = (
+        "import os, rhq_metrics_spark.pydaemon; "
+        "print([os.environ[v] for v in ('OPENBLAS_NUM_THREADS', "
+        "'OMP_NUM_THREADS', 'MKL_NUM_THREADS')])"
+    )
+    env = {
+        k: v for k, v in os.environ.items()
+        if k not in ("OPENBLAS_NUM_THREADS", "OMP_NUM_THREADS", "MKL_NUM_THREADS")
+    }
+    out = subprocess.run(
+        [sys.executable, "-c", code], env=env, check=True,
+        capture_output=True, text=True, cwd=_REPO,
+    ).stdout
+    assert out.strip() == "['1', '1', '1']"
+    out = subprocess.run(
+        [sys.executable, "-c", code], env={**env, "OMP_NUM_THREADS": "3"},
+        check=True, capture_output=True, text=True, cwd=_REPO,
+    ).stdout
+    assert out.strip() == "['1', '3', '1']"

@@ -284,3 +284,110 @@ def test_hot_read_raises_after_persistent_path_loss(spark, tmp_path, monkeypatch
     monkeypatch.setattr(store, "_hot_segments", lambda mt: real + [ghost])
     with _pytest.raises(AnalysisException, match="PATH_NOT_FOUND"):
         store.points("gauge").count()
+
+
+# -- the two L0 segment writers (Spark DataFrame / driver-side Arrow) ---------
+
+_TWIN_BATCH1 = [
+    ("t1", "m", T0, 1.0, {"dc": "us"}),
+    ("t1", "m", T0 + 60_000, None),                      # null value kept
+    ("t1", "m", T0 + 120_000, 5.0),                      # same-batch duplicate:
+    ("t1", "m", T0 + 120_000, 9.0),                      # larger value wins
+    ("t1", "n", SLICE0 + 3 * TWO_HOURS_MS + 5, 2.5),     # a later slice
+    ("acme-corp", "m", T0, -3.0, {"k": "v", "q": "r"}),  # another bucket
+    ("Ω-tenant", "é", -1, 0.5),                          # pre-epoch slice
+]
+# overrides half of batch 1's keys and adds one new key
+_TWIN_BATCH2 = [
+    ("t1", "m", T0, 11.0),
+    ("t1", "m", T0 + 120_000, 4.0),
+    ("acme-corp", "m", T0, 13.0, {"k": "w"}),
+    ("t1", "m", T0 + 180_000, 7.0),
+]
+
+
+def _arrow_gauge(rows):
+    import pyarrow as pa
+
+    from rhq_metrics_spark.model import arrow_point_schema
+
+    full = [tuple(r) + (None,) * (5 - len(r)) for r in rows]
+    schema = arrow_point_schema("gauge")
+    return pa.Table.from_arrays(
+        [pa.array(list(col), f.type) for col, f in zip(zip(*full), schema)],
+        schema=schema,
+    )
+
+
+def _point_rows(df):
+    return sorted(
+        (r["tenant_id"], r["metric"], r["ts"], r["value"],
+         None if r["tags"] is None else sorted(r["tags"].items()))
+        for r in df.collect()
+    )
+
+
+@pytest.mark.parametrize("protocol", ["rename", "manifest"])
+def test_arrow_and_spark_segment_writers_are_twins(spark, tmp_path, protocol):
+    """``add_data_points`` writes a pyarrow Table (a REST body decoded on
+    the driver) with pyarrow and a DataFrame with Spark.  Both writers
+    must produce segments the store cannot tell apart: the same rows,
+    the same ``_slices.json`` sidecar, last-write-wins across segments
+    of either writer, and the same cold rows after compaction."""
+    import json
+
+    # the DDL keeps value nullable, as parse_wire's output does
+    ddl = "tenant_id string, metric string, ts long, value double, tags map<string,string>"
+    writers = {
+        "df": lambda rows: spark.createDataFrame(
+            [tuple(r) + (None,) * (5 - len(r)) for r in rows], ddl
+        ),
+        "arrow": _arrow_gauge,
+    }
+    orders = {"spark": ("df", "df"), "arrow": ("arrow", "arrow"),
+              "spark_then_arrow": ("df", "arrow"),
+              "arrow_then_spark": ("arrow", "df")}
+    stores = {
+        name: MetricsStore(spark, str(tmp_path / name), commit_protocol=protocol)
+        for name in orders
+    }
+    for name, (first, _) in orders.items():
+        stores[name].add_data_points("gauge", writers[first](_TWIN_BATCH1))
+
+    def sidecars(store):
+        return [json.loads((seg / "_slices.json").read_text())
+                for seg in store._hot_segments("gauge")]
+
+    s, a = stores["spark"], stores["arrow"]
+    assert _point_rows(a.points("gauge")) == _point_rows(s.points("gauge"))
+    assert len(_point_rows(s.points("gauge"))) == 6
+    scan = lambda st: st.find_data_points("gauge", "t1", "m", T0, T0 + 10**6)  # noqa: E731
+    assert _point_rows(scan(a)) == _point_rows(scan(s))
+    assert sidecars(a) == sidecars(s)
+    (seg,) = a._hot_segments("gauge")
+    assert [p.name.endswith(".parquet") for p in seg.iterdir()
+            if not p.name.startswith("_")] == [True]  # one file, no _SUCCESS
+
+    for name, (_, second) in orders.items():
+        stores[name].add_data_points("gauge", writers[second](_TWIN_BATCH2))
+    want = dict(((t, m, ts), v) for t, m, ts, v, *_ in _TWIN_BATCH1)
+    want[("t1", "m", T0 + 120_000)] = 9.0
+    want.update(((t, m, ts), v) for t, m, ts, v, *_ in _TWIN_BATCH2)
+    expected = _point_rows(s.points("gauge"))
+    assert {(t, m, ts): v for t, m, ts, v, _ in expected} == want
+    for name, store in stores.items():
+        assert _point_rows(store.points("gauge")) == expected, name
+
+    cold_cols = ["tenant_id", "metric", "ts", "value", "date_slice", "tenant_bucket"]
+    cold = {}
+    for name, store in stores.items():
+        assert store.compact("gauge", closed_before_ms=SLICE0 + TWO_HOURS_MS) == [
+            -TWO_HOURS_MS, SLICE0
+        ]
+        cold[name] = sorted(
+            tuple(r) for r in store._read_layer("gauge", "cold")
+            .select(*cold_cols).collect()
+        )
+        assert _point_rows(store.points("gauge")) == expected, name
+    assert len(cold["spark"]) == 6
+    assert all(rows == cold["spark"] for rows in cold.values())

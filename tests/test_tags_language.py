@@ -5,10 +5,11 @@ Mirrors ExpressionTagQueryITest / TagsITest cases (SURVEY.md §5):
 has-key convention for negative operators, full-match regex anchoring.
 """
 
+import pyspark.sql.functions as F
 import pytest
 
 from rhq_metrics_spark.model import METRICS_IDX_SCHEMA
-from rhq_metrics_spark.tags import find_metric_ids, parse_tag_query
+from rhq_metrics_spark.tags import find_metric_ids, full_match, parse_tag_query
 from rhq_metrics_spark.tags.parser import And, Cmp, Exists, In, Or
 
 
@@ -126,3 +127,37 @@ class TestCompiler:
     def test_id_regex_filter(self, metrics_idx):
         assert ids(find_metric_ids(metrics_idx, "env = prod", id_regex="m1")) == ["m1"]
         assert ids(find_metric_ids(metrics_idx, "env = prod", id_regex="!m1")) == ["m3"]
+
+
+def test_full_match_twins_rlike_and_compiles_once(spark, tmp_path):
+    """``full_match`` keeps ``rlike``'s anchored Java-regex answers
+    (nulls included) but leaves the pattern out of the generated code,
+    so a new pattern reuses the compiled stage instead of compiling a
+    fresh one."""
+    values = ["", "web01", "web", "a\nb", "abc\n", "x.y", "xzy", None,
+              "\u03a9\u03a9", "a|b", "WEB01"]
+    path = str(tmp_path / "values")
+    spark.createDataFrame([(v,) for v in values], "v string") \
+        .coalesce(1).write.parquet(path)
+    df = spark.read.parquet(path)
+    v = F.col("v")
+    patterns = [".*", "web", "web.*", "a.b", "abc", r"x\.y", "[a-c]+",
+                "(?i)web01", "", "\u03a9+", "a|b", "a\\|b"]
+    for p in patterns:
+        got = df.select(v, full_match(v, p).alias("m")).collect()
+        want = df.select(v, v.rlike(f"^(?:{p})$").alias("m")).collect()
+        assert sorted(got, key=str) == sorted(want, key=str), p
+
+    compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics \
+        .METRIC_COMPILATION_TIME()
+
+    def compiled_by(cond) -> int:
+        before = compiles.getCount()
+        df.filter(cond).collect()
+        return compiles.getCount() - before
+
+    compiled_by(full_match(v, "w.*1"))
+    assert compiled_by(full_match(v, "w.*2")) == 0
+    # the inlined rlike pattern is what made every new pattern compile
+    assert compiled_by(v.rlike("^(?:w.*3)$")) > 0
+
