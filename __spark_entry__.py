@@ -5391,7 +5391,7 @@ def q_w9_increase_hybrid(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-slice partials union with tail pseudo-partials built by the
     SAME deterministic builder, and the ordinary cross-slice merge
     bridges the watermark like any slice boundary
-    (service._increase_routed is the production twin over the store;
+    (service.increase's routed path is the production twin over the store;
     reference behavior: compressed ∪ temp merge,
     MetricsServiceImpl.java:662-693).  Bit-identical to the raw-scan
     operator, so the oracle is w8's plain adjacent-pair SQL."""
@@ -6571,7 +6571,7 @@ def q_b16_hybrid_production(spark: SparkSession, sf_dir: str) -> DataFrame:
     a window-aligned finality watermark, and serves the watermark-
     crossing grid through ``MetricsService.gauge_stats`` — the exact
     route a REST dashboard query takes (service._rollup_routed_stats +
-    _tail_partials; reference: compressed-blocks ∪ live-temp merge,
+    _tail_frag; reference: compressed-blocks ∪ live-temp merge,
     MetricsServiceImpl.java:662-693).  The query FAILS (red driver row)
     if routing is inactive or the routed plan does not read both the
     rollup parquet and the raw store tail, so correctness — not just
@@ -6631,7 +6631,6 @@ def q_b16_hybrid_production(spark: SparkSession, sf_dir: str) -> DataFrame:
     store_path, rollup_path, b0, n = _B16_STATE[sf_dir]
     svc = MetricsService(spark, MetricsStore(spark, store_path))
     svc.attach_rollup("gauge", rollup_path, ROLLUP_WIN_MS)
-    svc.hybrid_min_prefix_points = 0  # measuring the route, not the gate
     buckets = Buckets.from_step(b0, b0 + n * ROLLUP_STEP_MS, ROLLUP_STEP_MS)
     routed = svc.try_routed_stats("gauge", "t", "click", buckets)
     assert routed is not None, "hybrid routing inactive"

@@ -343,9 +343,6 @@ def _query_latency_kpis(spark, store, lo: int, window_ms: int, timings: dict) ->
         F.unix_millis(F.col("window_end")) <= cut
     )
     svc.attach_rollup("gauge", truncated, rollup_win)
-    # this section MEASURES the hybrid route, so force it on regardless
-    # of the cost gate's default (test_rollup.py pins gate behavior)
-    svc.hybrid_min_prefix_points = 0
     hybrid_bks = Buckets.from_step(rlo, rlo + 14 * step, step)
     probe = svc.try_routed_stats("gauge", "bench", metrics[0], hybrid_bks)
     assert probe is not None, "hybrid routing inactive"
@@ -394,13 +391,12 @@ def _query_latency_kpis(spark, store, lo: int, window_ms: int, timings: dict) ->
     svc.stats_query("bench", hybrid_bks, {"gauge": metrics},
                     include_median=False)
     timings["stats_query_100m_hybrid_sec"] = round(time.time() - t0, 3)
-    saved = svc._rollups
-    svc._rollups = {}
+    saved = svc._attached.pop(("stats", "gauge"))
     t0 = time.time()
     svc.stats_query("bench", hybrid_bks, {"gauge": metrics},
                     include_median=False)
     timings["stats_query_100m_hybrid_raw_sec"] = round(time.time() - t0, 3)
-    svc._rollups = saved
+    svc._attached["stats", "gauge"] = saved
     shutil.rmtree(hist_dir, ignore_errors=True)
     shutil.rmtree(rollup_dir, ignore_errors=True)
 

@@ -332,12 +332,10 @@ class MaintenanceRunner:
 
         def attach(svc, store, cfg, mt):
             win_ms = int(cfg.get("window_ms", store.slice_ms))
-            if mt in svc._rollups:
-                svc.refresh_rollup_watermark(mt)
-            else:
-                svc.attach_rollup(mt, cfg["path"], win_ms)
+            svc.attach_rollup(mt, cfg["path"], win_ms)
 
-        return self._emit_partials(cfg, compacted, "gauge", build, attach)
+        return self._emit_partials(cfg, compacted, "gauge", build, attach,
+                                   family="stats")
 
     def _emit_activity_partials(self, compacted: dict[str, list[int]]) -> int:
         cfg = self.activity_sink
@@ -394,15 +392,13 @@ class MaintenanceRunner:
             )
 
         def attach(svc, store, cfg, mt):
-            if mt in svc._hist_rollups:
-                svc.refresh_histogram_watermark(mt)
-            else:
-                svc.attach_histogram_rollup(
-                    mt, cfg["path"], store.slice_ms,
-                    cfg["lo"], cfg["hi"], cfg["n_bins"],
-                )
+            svc.attach_histogram_rollup(
+                mt, cfg["path"], store.slice_ms,
+                cfg["lo"], cfg["hi"], cfg["n_bins"],
+            )
 
-        return self._emit_partials(cfg, compacted, "gauge", build, attach)
+        return self._emit_partials(cfg, compacted, "gauge", build, attach,
+                                   family="hist")
 
     def _emit_increase_partials(self, compacted: dict[str, list[int]]) -> int:
         cfg = self.increase_sink
@@ -420,15 +416,13 @@ class MaintenanceRunner:
             )
 
         def attach(svc, store, cfg, mt):
-            if mt in svc._increase_rollups:
-                svc.refresh_increase_watermark(mt)
-            else:
-                svc.attach_increase_rollup(
-                    mt, cfg["path"], store.slice_ms,
-                    value_scale=int(cfg.get("value_scale", 100)),
-                )
+            svc.attach_increase_rollup(
+                mt, cfg["path"], store.slice_ms,
+                value_scale=int(cfg.get("value_scale", 100)),
+            )
 
-        return self._emit_partials(cfg, compacted, "counter", build, attach)
+        return self._emit_partials(cfg, compacted, "counter", build, attach,
+                                   family="increase")
 
     def _emit_twa_partials(self, compacted: dict[str, list[int]]) -> int:
         cfg = self.twa_sink
@@ -446,16 +440,14 @@ class MaintenanceRunner:
             )
 
         def attach(svc, store, cfg, mt):
-            if mt in svc._twa_rollups:
-                svc.refresh_twa_watermark(mt)
-            else:
-                svc.attach_twa_rollup(
-                    mt, cfg["path"], store.slice_ms,
-                    value_scale=int(cfg.get("value_scale", 100)),
-                    max_gap_ms=cfg.get("max_gap_ms"),
-                )
+            svc.attach_twa_rollup(
+                mt, cfg["path"], store.slice_ms,
+                value_scale=int(cfg.get("value_scale", 100)),
+                max_gap_ms=cfg.get("max_gap_ms"),
+            )
 
-        return self._emit_partials(cfg, compacted, "gauge", build, attach)
+        return self._emit_partials(cfg, compacted, "gauge", build, attach,
+                                   family="twa")
 
     def _emit_availability_partials(self, compacted: dict[str, list[int]]) -> int:
         cfg = self.availability_sink
@@ -472,12 +464,10 @@ class MaintenanceRunner:
             )
 
         def attach(svc, store, cfg, mt):
-            if svc._avail_rollup is not None:
-                svc.refresh_availability_watermark()
-            else:
-                svc.attach_availability_rollup(cfg["path"], store.slice_ms)
+            svc.attach_availability_rollup(cfg["path"], store.slice_ms)
 
-        return self._emit_partials(cfg, compacted, "availability", build, attach)
+        return self._emit_partials(cfg, compacted, "availability", build,
+                                   attach, family="avail")
 
     def _emit_seasonal_partials(self, compacted: dict[str, list[int]]) -> int:
         cfg = self.seasonal_sink
@@ -522,7 +512,7 @@ class MaintenanceRunner:
 
     def _emit_partials(
         self, cfg: dict, compacted: dict[str, list[int]], default_mt: str,
-        build_fn, attach_fn,
+        build_fn, attach_fn, family: str | None = None,
     ) -> int:
         """Shared partial-sink emitter: recompute the just-compacted
         slices' partials from the freshly-compacted COLD data (pruned
@@ -532,7 +522,8 @@ class MaintenanceRunner:
         existing cold and returns the slice again) REPLACES its previous
         partial rows instead of double-appending, which would silently
         double every "exact" rollup-served result.  Then attach on first
-        use / cheap-refresh the serving watermark afterwards."""
+        use; a ``family`` already in the service's attached-rollup
+        registry only gets its serving watermark refreshed."""
         mt = cfg.get("metric_type", default_mt)
         slices = [int(x) for x in (compacted.get(mt) or [])]
         if not slices:
@@ -551,7 +542,10 @@ class MaintenanceRunner:
             .parquet(cfg["path"])
         )
         if cfg.get("attach", True):
-            attach_fn(self.service, store, cfg, mt)
+            if (family, mt) in self.service._attached:
+                self.service._refresh(family, mt)
+            else:
+                attach_fn(self.service, store, cfg, mt)
         return len(slices)
 
     # -- streaming hook (event-time driven) --------------------------------

@@ -11,7 +11,9 @@ metric discovery, and the lifecycle jobs.  Thin dict adapters
 
 from __future__ import annotations
 
+import math
 from collections.abc import Mapping, Sequence
+from typing import NamedTuple
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
@@ -70,33 +72,45 @@ def _hist_quantile_expr(q: float, name: str, lo: float, w_bin: float) -> str:
     )
 
 
+def _pct_names(percentiles: Sequence[float]) -> dict[str, float]:
+    """Distinct percentile column names in request order, each with the
+    first quantile that produced it (50 and 50.0 are both ``p50``)."""
+    names: dict[str, float] = {}
+    for q in percentiles:
+        names.setdefault(percentile_col_name(q), q)
+    return names
+
+
+_BIN_STRUCT_T = "struct<bin:int,c:bigint>"
+_NULL_HB = f",\n       cast(null as {_BIN_STRUCT_T}) AS _hb"
+
+
+class Attached(NamedTuple):
+    """One attached rollup family for one metric type: the partials
+    frame, its epoch-aligned window/slice grid, the finality watermark
+    (epoch ms; None while the frame is empty), the parquet path it was
+    read from (None for a frame) and the family's build parameters."""
+
+    df: DataFrame
+    grid_ms: int
+    watermark: int | None
+    path: str | None
+    params: dict
+
+
 class MetricsService:
     """create/ingest/query facade over a :class:`MetricsStore`."""
 
     def __init__(self, spark: SparkSession, store: MetricsStore):
         self.spark = spark
         self.store = store
-        # metric_type -> (rollup DataFrame, window_ms): continuous
-        # aggregates registered for read routing (attach_rollup)
-        self._rollups: dict[str, tuple[DataFrame, int]] = {}
+        # (family, metric_type) -> Attached: the watermarked partials
+        # registered for read routing — "stats" (attach_rollup), "hist",
+        # "increase", "twa" and "avail" (see _attach / _routable)
+        self._attached: dict[tuple[str, str], Attached] = {}
         #: W18 activity-register serving sources (r13)
         self._activity_regs: dict[str, dict] = {}
-        self._hist_rollups: dict[str, tuple] = {}
-        self._increase_rollups: dict[str, tuple] = {}
-        self._twa_rollups: dict[str, tuple] = {}
         self._seasonal_profiles: dict[str, tuple] = {}
-        self._avail_rollup: tuple | None = None
-        # Cost-based serving router (see _hybrid_profitable): a
-        # watermark-crossing stats query goes hybrid only when the
-        # estimated finalized-prefix raw points the rollup replaces
-        # reach this — below it, one raw scan beats two scans' fixed
-        # cost.  Default 0 = always prefer hybrid, matching the
-        # reference's unconditional compressed∪temp-table merge
-        # (MetricsServiceImpl.java:662-693).  Deployments where serving
-        # latency dominates can raise it to the measured crossover —
-        # (per-scan fixed cost) / (per-point scan cost); ~200k points
-        # on local[32] per tools/hybrid_scale_smoke.py (SCALE.md).
-        self.hybrid_min_prefix_points: int = 0
         # Pinned open-tail base frames (see _tail_base): the hybrid
         # route's raw-scan DataFrame construction re-ran per request
         # (~50 ms of the ~300 ms serving constant) even though the open
@@ -492,6 +506,115 @@ class MetricsService:
             metric_type, tenant_id, metrics, start, end, order=None
         )
 
+    # -- attached rollups: one registry, one attach, one route gate ------------
+
+    def _read_partials(self, family: str, src) -> DataFrame:
+        """``src`` (DataFrame or parquet path) as the family's partials
+        frame: the slice-keyed families read ``slice_start`` as epoch-ms
+        long; the stats rollup's frame is used exactly as given."""
+        df = self.spark.read.parquet(src) if isinstance(src, str) else src
+        if family == "stats":
+            return df
+        return df.withColumn("slice_start", F.col("slice_start").cast("long"))
+
+    def _watermark(self, family: str, df: DataFrame, grid_ms: int) -> int | None:
+        """Finality watermark in one job: the newest window's end for the
+        stats rollup, the newest slice's start + ``grid_ms`` otherwise."""
+        if family == "stats":
+            return df.agg(F.max(F.unix_millis(F.col("window_end")))).collect()[0][0]
+        hi = df.agg(F.max("slice_start")).collect()[0][0]
+        return None if hi is None else int(hi) + grid_ms
+
+    def _attach(self, family: str, mt: str, src, grid_ms: int, bad_pred,
+                what: str, **params) -> None:
+        """Register ``src`` as the ``(family, mt)`` serving fast path.
+        Validates ONCE (one job) that no row matches ``bad_pred`` — the
+        family's grid-alignment check, else ``ValueError(what)`` — and
+        caches the finality watermark (one job), so a routed request
+        costs zero extra jobs.  The cached watermark only ever causes a
+        conservative fall-back to raw for ranges newer than the attach;
+        :meth:`_refresh` advances it."""
+        path = src if isinstance(src, str) else None
+        df = self._read_partials(family, src)
+        if df.filter(bad_pred).limit(1).count() > 0:
+            raise ValueError(what)
+        self._attached[(family, mt)] = Attached(
+            df, grid_ms, self._watermark(family, df, grid_ms), path, params
+        )
+
+    def _refresh(self, family: str, mt: str) -> int | None:
+        """Re-read an attached family's finality watermark (its sink
+        appends finalized slices over time); returns the new one, None
+        when nothing is attached.  One aggregation, no re-validation.
+
+        A path-attached frame is RE-RESOLVED here: a parquet DataFrame
+        caches its file listing at creation, so files the sink appended
+        after attach are invisible to the old frame — refresh drops the
+        cached listing and rebuilds."""
+        a = self._attached.get((family, mt))
+        if a is None:
+            return None
+        df = a.df
+        if a.path is not None:
+            self.spark.catalog.refreshByPath(a.path)
+            df = self._read_partials(family, a.path)
+        wm = self._watermark(family, df, a.grid_ms)
+        self._attached[(family, mt)] = a._replace(df=df, watermark=wm)
+        return wm
+
+    def _routable(self, family: str, mt: str, start: int, step: int,
+                  end: int | None = None, **params) -> Attached | None:
+        """The one route gate: the attached ``(family, mt)`` partials when
+        a request starting at ``start`` with bucket ``step`` is provably
+        answerable from them, else None (caller falls back to raw).
+
+        Routing requires (a) grid alignment — ``step`` and ``start``
+        (and ``end``, for the slice-merge families) multiples of the
+        grid the partials were validated against at attach, so every
+        window/slice tiles wholly inside one bucket; (b) finality — the
+        range STARTS before the watermark (a range ending past it is
+        served hybrid by the caller); (c) every ``params`` value equal
+        to the attach-time build parameter of the same name —
+        mismatches fall back rather than serve subtly different
+        semantics.  Pure driver arithmetic: no jobs."""
+        a = self._attached.get((family, mt))
+        if a is None or a.watermark is None or start >= a.watermark:
+            return None
+        g = a.grid_ms
+        if step % g or start % g or (end is not None and end % g):
+            return None
+        if any(a.params.get(k) != v for k, v in params.items()):
+            return None
+        return a
+
+    def _slice_routed(self, a: Attached, mt: str, tenant_id, metric,
+                      start: int | None, end: int, cols, build, merge
+                      ) -> DataFrame:
+        """Serve a slice-partials family (increase, TWA, availability)
+        from ``a``, which passed :meth:`_routable`: the series' own
+        finalized slices in ``[start, end)`` (``start`` None: its whole
+        history with the key columns dropped — availability merges
+        ungrouped), merged by ``merge``.  A range ending past the
+        finality watermark is served HYBRID: the open tail's raw points
+        become per-slice pseudo-partials through ``build``, the family's
+        SAME deterministic builder (bit-identical to what compaction
+        would write), union with the finalized partials on ``cols``,
+        and the ordinary cross-slice merge reconstructs the
+        watermark-bridging state like any other slice boundary."""
+        own = (F.col("tenant_id") == tenant_id) & (F.col("metric") == metric)
+        if start is None:
+            mine = a.df.filter(own).drop("tenant_id", "metric")
+        else:
+            mine = a.df.filter(
+                own & (F.col("slice_start") >= start)
+                & (F.col("slice_start") < end)
+            )
+        if end > a.watermark:
+            tail = build(self._tail_scan(mt, tenant_id, metric,
+                                         a.watermark, end))
+            mine = mine.select(*cols).unionByName(tail.select(*cols))
+        return merge(mine)
+
     def attach_rollup(self, metric_type: str, rollup, window_ms: int) -> None:
         """Register a continuous-aggregate table (the
         ``streaming.ingest.start_rollup_stream`` sink, or any frame with
@@ -510,91 +633,55 @@ class MetricsService:
         zero extra jobs.  The cached watermark only ever causes a
         conservative fall-back to raw for ranges newer than the attach;
         call :meth:`refresh_rollup_watermark` after the sink advances."""
-        path = rollup if isinstance(rollup, str) else None
-        df = self.spark.read.parquet(rollup) if path else rollup
-        window_ms = int(window_ms)
+        w = int(window_ms)
         start_ms = F.unix_millis(F.col("window_start"))
         end_ms = F.unix_millis(F.col("window_end"))
-        bad = df.filter(
-            (start_ms % window_ms != 0) | (end_ms - start_ms != window_ms)
-        )
-        if bad.limit(1).count() > 0:
-            raise ValueError(
-                f"rollup windows are not epoch-aligned {window_ms}ms "
-                "tumbling windows"
-            )
-        meta = df.agg(
-            F.max(end_ms).alias("hi"),
-            F.avg("samples").alias("density"),
-        ).collect()[0]
-        self._rollups[MetricType.check(metric_type)] = (
-            df, window_ms, meta["hi"], path, meta["density"]
+        self._attach(
+            "stats", MetricType.check(metric_type), rollup, w,
+            (start_ms % w != 0) | (end_ms - start_ms != w),
+            f"rollup windows are not epoch-aligned {w}ms tumbling windows",
         )
 
     def refresh_rollup_watermark(self, metric_type: str) -> int | None:
         """Re-read the attached rollup's finality watermark (the rollup
         sink appends finalized windows over time); returns the new one.
+        A path-attached rollup is re-resolved (see :meth:`_refresh`)."""
+        return self._refresh("stats", MetricType.check(metric_type))
 
-        A path-attached rollup is RE-RESOLVED here: a parquet DataFrame
-        caches its file listing at creation, so files the sink appended
-        after attach are invisible to the old frame — refresh drops the
-        cached listing and rebuilds."""
-        entry = self._rollups.get(MetricType.check(metric_type))
-        if entry is None:
-            return None
-        df, window_ms, _, path = entry[:4]
-        if path is not None:
-            self.spark.catalog.refreshByPath(path)
-            df = self.spark.read.parquet(path)
-        meta = df.agg(
-            F.max(F.unix_millis(F.col("window_end"))).alias("hi"),
-            F.avg("samples").alias("density"),
-        ).collect()[0]
-        self._rollups[metric_type] = (
-            df, window_ms, meta["hi"], path, meta["density"]
-        )
-        return meta["hi"]
+    @staticmethod
+    def _zeros_frag(buckets: Buckets, extra: str = "") -> str:
+        """One null/zero partial row per grid cell: the grid fill merged
+        into the same hash-agg as the partials (no dimension join)."""
+        return f"""
+SELECT id AS bucket_idx, cast(null as double) AS `min`,
+       cast(null as double) AS `max`, cast(null as double) AS `sum`,
+       cast(0 as bigint) AS samples{extra}
+FROM range({buckets.count})"""
 
-    def _hybrid_profitable(
-        self, entry: tuple, buckets: Buckets, n_metrics: int | None
-    ) -> bool:
-        """Cost gate for the watermark-crossing (hybrid) route — pure
-        driver arithmetic, no jobs.
-
-        A pure-prefix query always routes (the rollup reads strictly
-        fewer rows than raw, one scan either way).  A CROSSING query
-        pays a second scan: hybrid ≈ 2·fixed + points(tail)·per_point,
-        raw ≈ fixed + points(prefix+tail)·per_point — hybrid wins only
-        when the finalized-prefix points it avoids reading outweigh one
-        scan's fixed cost.  The prefix estimate is the rollup's own
-        density statistic (avg ``samples`` per (metric, window) row,
-        cached by attach/refresh in the same job as the watermark) ×
-        prefix windows × requested metrics.  Density is an OVERestimate
-        for series sparser than the store average — the failure mode is
-        an unprofitable-but-correct hybrid, never a wrong answer.
-        ``n_metrics=None`` (tag-driven / all-metrics scans) routes
-        hybrid: fleet-wide dashboards are exactly the dense shape.
-        Threshold: :attr:`hybrid_min_prefix_points`."""
-        density = entry[4] if len(entry) > 4 else None
-        if density is None or n_metrics is None:
-            return True
-        win_ms, hi = entry[1], entry[2]
-        prefix_windows = max(0, min(buckets.end, hi) - buckets.start) / win_ms
-        est = density * prefix_windows * max(1, n_metrics)
-        return est >= self.hybrid_min_prefix_points
+    def _stats_union(self, a: Attached, mt: str, tenant_id, metric,
+                     buckets: Buckets, keep_metric: bool = False,
+                     fill: str = "") -> str:
+        """UNION ALL body of the stats-rollup routes: the attached
+        windows as per-bucket partials, the ``fill`` fragment, and — for
+        a range ending past the watermark — the open tail's raw points
+        as degenerate partials from the pinned tail scan."""
+        pv = self._bind_served_view(f"p_{mt}", a.df)
+        frags = [self._prefix_frag(tenant_id, metric, buckets,
+                                   keep_metric=keep_metric, view=pv)]
+        if fill:
+            frags.append(fill)
+        if buckets.end > a.watermark:
+            tv = self._tail_view(mt, tenant_id, a.watermark)
+            frags.append(self._tail_frag(metric, buckets, a.watermark,
+                                         keep_metric=keep_metric, view=tv))
+        return "\nUNION ALL\n".join(frags)
 
     def _rollup_routed_stats(
         self, metric_type: str, tenant_id, metric, buckets: Buckets
     ) -> DataFrame | None:
         """Serve A1 bucket stats from an attached rollup when that is
-        provably equivalent to the raw scan; None → caller falls back.
-
-        Routing requires (a) grid alignment — ``step`` a multiple of the
-        rollup window and ``start`` on the window grid (windows are
-        epoch-aligned; validated once at attach), and (b) the range to
-        START before the newest finalized window (cached at attach).
-        Both checks are pure driver arithmetic — a routed query launches
-        no extra jobs.
+        provably equivalent to the raw scan (:meth:`_routable`); None →
+        caller falls back.
 
         A range that ENDS past the finality watermark — the reference's
         *default* dashboard query, now−8h..now (TimeRange.java:32,43-44)
@@ -607,17 +694,8 @@ class MetricsService:
         touches hours of one series, never the finalized history.  Late
         points under an already-finalized window are the routed path's
         documented (attach-time) tradeoff, identical here."""
-        entry = self._rollups.get(metric_type)
-        if entry is None:
-            return None
-        rollup, win_ms, hi = entry[0], entry[1], entry[2]
-        if buckets.step % win_ms != 0 or buckets.start % win_ms != 0:
-            return None
-        if hi is None or buckets.start >= hi:
-            return None
-        if buckets.end > hi and not self._hybrid_profitable(
-            entry, buckets, 1 if isinstance(metric, str) else None
-        ):
+        a = self._routable("stats", metric_type, buckets.start, buckets.step)
+        if a is None:
             return None
         # ONE aggregation for the whole query: every rollup window tiles
         # wholly inside one bucket (alignment gate), so window rows ARE
@@ -634,16 +712,8 @@ class MetricsService:
         # than the aggregation executed (VERDICT r8 item 2).  min/max/
         # sum cast to double so the served type matches the raw path
         # regardless of the attached rollup's native value type.
-        pv = self._bind_served_view(f"p_{metric_type}", rollup)
-        frags = [self._prefix_frag(tenant_id, metric, buckets, view=pv), f"""
-SELECT id AS bucket_idx, cast(null as double) AS `min`,
-       cast(null as double) AS `max`, cast(null as double) AS `sum`,
-       cast(0 as bigint) AS samples
-FROM range({buckets.count})"""]
-        if buckets.end > hi:
-            tv = self._tail_view(metric_type, tenant_id, hi)
-            frags.append(self._tail_frag(metric, buckets, hi, view=tv))
-        body = "\nUNION ALL\n".join(frags)
+        body = self._stats_union(a, metric_type, tenant_id, metric, buckets,
+                                 fill=self._zeros_frag(buckets))
         return self._serving_spark().sql(f"""
 SELECT {buckets.start}L + bucket_idx * {buckets.step}L AS `start`,
        {buckets.start}L + (bucket_idx + 1) * {buckets.step}L AS `end`,
@@ -665,9 +735,13 @@ FROM (SELECT bucket_idx, min(`min`) AS `min`, max(`max`) AS `max`,
     def _prefix_frag(self, tenant_id, metric, buckets: Buckets,
                      cut: int | None = None, keep_metric: bool = False,
                      extra: str = "", view: str = "{p}") -> str:
-        """Finalized-prefix rollup windows as per-bucket partial rows —
-        the SQL-text twin of :meth:`_window_partials`, selecting FROM a
-        ``{p}`` placeholder bound by the caller's one spark.sql call.
+        """Finalized-prefix rollup windows as per-bucket partial rows
+        (``bucket_idx, min, max, sum, samples``) — no aggregation: the
+        alignment gate guarantees each window falls wholly inside one
+        bucket, so window rows are already mergeable partials.  Selects
+        FROM a ``{p}`` placeholder bound by the caller's one spark.sql
+        call; the timestamp-literal comparisons keep parquet
+        PushedFilters.
         ``cut`` (epoch ms) additionally bounds ``window_end`` for fused
         hybrid routes whose prefix ends before the attached watermark;
         ``extra`` appends trailing select-list entries (the fused hist
@@ -689,9 +763,12 @@ WHERE tenant_id = {_sql_str(tenant_id)}
     def _tail_frag(self, metric, buckets: Buckets, tail_lo: int,
                    keep_metric: bool = False, extra: str = "",
                    view: str = "{t}") -> str:
-        """Open-tail raw points as degenerate per-bucket partials — the
-        SQL-text twin of :meth:`_tail_partials`, selecting FROM a
-        ``{t}`` placeholder the caller binds to :meth:`_tail_base`."""
+        """Open-tail raw points in ``[tail_lo, buckets.end)`` as
+        DEGENERATE per-bucket partials (each point is its own
+        min/max/sum with samples=1) — schema-aligned with
+        :meth:`_prefix_frag` so one union + one hash-agg merges the
+        finalized prefix and the open tail.  Selects FROM a ``{t}``
+        placeholder the caller binds to :meth:`_tail_base`."""
         cols = "metric, " if keep_metric else ""
         return f"""
 SELECT {cols}cast((ts - {buckets.start}L) / {buckets.step}L as bigint) AS bucket_idx,
@@ -753,73 +830,6 @@ WHERE ts >= {max(tail_lo, buckets.start)}L AND ts < {buckets.end}L
             f"t_{metric_type}_{th}_{floor_ms}", df
         )
 
-    def _window_partials(
-        self, rollup: DataFrame, tenant_id, metric, buckets: Buckets,
-        keep_metric: bool = False,
-    ) -> DataFrame:
-        """Rollup windows inside the grid as per-bucket PARTIAL rows
-        (``bucket_idx, min, max, sum, samples``) — no aggregation: the
-        alignment gate guarantees each window falls wholly inside one
-        bucket, so window rows are already mergeable partials.
-
-        Built as TWO parsed SQL strings (one filter, one selectExpr):
-        this runs per served request, and the equivalent Column-API
-        chain cost ~90 ms of Py4J plan construction per call (same
-        diagnosis as the fused quantile expressions below).  The
-        timestamp-literal comparisons keep parquet PushedFilters."""
-        grid_end = buckets.start + buckets.step * buckets.count
-        conds = [
-            f"tenant_id = {_sql_str(tenant_id)}",
-            f"window_start >= timestamp_millis({buckets.start}L)",
-            f"window_end <= timestamp_millis({grid_end}L)",
-        ]
-        if metric is not None:
-            if isinstance(metric, str):
-                conds.append(f"metric = {_sql_str(metric)}")
-            else:
-                conds.append(
-                    "metric IN ({})".format(
-                        ", ".join(_sql_str(m) for m in metric))
-                )
-        cols = ["metric"] if keep_metric else []
-        return rollup.filter(" AND ".join(conds)).selectExpr(
-            *cols,
-            f"cast((unix_millis(window_start) - {buckets.start}L) "
-            f"/ {buckets.step}L as bigint) AS bucket_idx",
-            "cast(`min` as double) AS `min`",
-            "cast(`max` as double) AS `max`",
-            "cast(`sum` as double) AS `sum`",
-            "cast(samples as bigint) AS samples",
-        )
-
-    def _tail_partials(
-        self, metric_type: str, tenant_id, metric, buckets: Buckets, hi: int,
-        keep_metric: bool = False,
-    ) -> DataFrame:
-        """Open-tail raw points in ``[hi, buckets.end)`` (the store's
-        slice pruning means only open-slice files are read) as
-        DEGENERATE per-bucket partial rows (each point is its own
-        min/max/sum with samples=1) — schema-aligned with
-        :meth:`_window_partials` so one union + one hash-agg merges the
-        finalized prefix and the open tail.  One parsed filter + one
-        selectExpr over the PINNED tail base (r9: the per-request
-        find_data_points construction was ~50 ms of the serving
-        constant) — this is a per-served-request path."""
-        pts = self._tail_base(metric_type, tenant_id, hi)
-        cols = ["metric"] if keep_metric else []
-        return pts.where(
-            f"ts >= {max(hi, buckets.start)}L AND ts < {buckets.end}L"
-            f" AND {self._metric_pred(metric)}"
-        ).selectExpr(
-            *cols,
-            f"cast((ts - {buckets.start}L) / {buckets.step}L as bigint)"
-            " AS bucket_idx",
-            "cast(value as double) AS `min`",
-            "cast(value as double) AS `max`",
-            "cast(value as double) AS `sum`",
-            "cast(1 as bigint) AS samples",
-        )
-
     def build_histogram_rollup(
         self, metric_type: str, slice_ms: int, lo: float, hi: float, n_bins: int
     ) -> DataFrame:
@@ -848,23 +858,14 @@ WHERE ts >= {max(tail_lo, buckets.start)}L AND ts < {buckets.end}L
         ``percentile_impl='hist'``).  Caches the finality watermark
         ``max(slice_start) + slice_ms`` — routed queries cost no extra
         jobs."""
-        path = hists if isinstance(hists, str) else None
-        df = self.spark.read.parquet(hists) if path else hists
-        df = df.withColumn("slice_start", F.col("slice_start").cast("long"))
-        slice_ms = int(slice_ms)
-        bad = df.filter(
-            (F.col("slice_start") % slice_ms != 0)
-            | (F.col("bin") < 0) | (F.col("bin") >= n_bins)
-        )
-        if bad.limit(1).count() > 0:
-            raise ValueError(
-                f"histogram partials are not aligned {slice_ms}ms slices "
-                f"with bins in [0, {n_bins})"
-            )
-        hi_w = df.agg(F.max("slice_start").alias("hi")).collect()[0]["hi"]
-        watermark = None if hi_w is None else int(hi_w) + slice_ms
-        self._hist_rollups[MetricType.check(metric_type)] = (
-            df, slice_ms, float(lo), float(hi), int(n_bins), watermark, path
+        s = int(slice_ms)
+        self._attach(
+            "hist", MetricType.check(metric_type), hists, s,
+            (F.col("slice_start") % s != 0)
+            | (F.col("bin") < 0) | (F.col("bin") >= n_bins),
+            f"histogram partials are not aligned {s}ms slices "
+            f"with bins in [0, {n_bins})",
+            lo=float(lo), hi=float(hi), n_bins=int(n_bins),
         )
 
     def refresh_histogram_watermark(self, metric_type: str) -> int | None:
@@ -872,21 +873,7 @@ WHERE ts >= {max(tail_lo, buckets.start)}L AND ts < {buckets.end}L
         (the streaming partials sink appends finalized slices over
         time); returns the new one.  Mirrors
         :meth:`refresh_rollup_watermark`."""
-        entry = self._hist_rollups.get(MetricType.check(metric_type))
-        if entry is None:
-            return None
-        df, slice_ms, lo, hi, n_bins, _, path = entry
-        if path is not None:
-            self.spark.catalog.refreshByPath(path)
-            df = self.spark.read.parquet(path).withColumn(
-                "slice_start", F.col("slice_start").cast("long")
-            )
-        hi_w = df.agg(F.max("slice_start").alias("hi")).collect()[0]["hi"]
-        watermark = None if hi_w is None else int(hi_w) + slice_ms
-        self._hist_rollups[metric_type] = (
-            df, slice_ms, lo, hi, n_bins, watermark, path
-        )
-        return watermark
+        return self._refresh("hist", MetricType.check(metric_type))
 
     def percentiles_from_rollup(
         self,
@@ -910,36 +897,28 @@ WHERE ts >= {max(tail_lo, buckets.start)}L AND ts < {buckets.end}L
         bin expression into degenerate count=1 partial rows and unioned
         with the finalized partials before the quantile merge — the
         estimate keeps the one-bin-width error bound."""
-        entry = self._hist_rollups.get(MetricType.check(metric_type))
-        if entry is None or not percentiles:
-            return None
-        hists, slice_ms, lo, hi, n_bins, watermark = entry[:6]
-        if buckets.step % slice_ms != 0 or buckets.start % slice_ms != 0:
-            return None
+        a = self._routable("hist", MetricType.check(metric_type),
+                           buckets.start, buckets.step)
         # histogram_quantiles buckets by the EPOCH-aligned floor of
         # slice_start/step — a grid whose origin is off the step grid
         # would group slices into the wrong buckets and the bucket_start
         # join would miss (nulls instead of the exact fallback, breaking
         # the "never weaker than exact" contract) — refuse it
-        if buckets.start % buckets.step != 0:
+        if a is None or not percentiles or buckets.start % buckets.step != 0:
             return None
-        if watermark is None or buckets.start >= watermark:
-            return None
+        slice_ms, watermark = a.grid_ms, a.watermark
+        lo, hi, n_bins = a.params["lo"], a.params["hi"], a.params["n_bins"]
         from rhq_metrics_spark.operators.downsample import histogram_quantiles
-        from rhq_metrics_spark.operators.stats import (
-            bucket_dimension,
-            percentile_col_name,
-        )
+        from rhq_metrics_spark.operators.stats import bucket_dimension
 
-        mine = hists.filter(
+        mine = a.df.filter(
             (F.col("tenant_id") == tenant_id) & (F.col("metric") == metric)
             & (F.col("slice_start") >= buckets.start)
             & (F.col("slice_start") < buckets.end)
         ).select("tenant_id", "metric", "slice_start", "bin", "count")
         if buckets.end > watermark:
-            pts = self.store.find_data_points(
-                metric_type, tenant_id, metric, watermark, buckets.end,
-                order=None,
+            pts = self._tail_scan(
+                metric_type, tenant_id, metric, watermark, buckets.end
             )
             bin_w = (hi - lo) / n_bins
             raw_bin = F.floor((F.col("value").cast("double") - lo) / bin_w)
@@ -991,6 +970,95 @@ WHERE ts >= {max(tail_lo, buckets.start)}L AND ts < {buckets.end}L
             .drop("bucket_idx", "bucket_start")
         )
 
+    def _hist_fused_gate(self, mt: str, buckets: Buckets):
+        """Route gate of the fused histogram routes: ``(stats, hist,
+        cut)`` when BOTH the stats rollup and the histogram partials
+        route (:meth:`_routable`) and the grid origin sits on the step
+        grid (see :meth:`percentiles_from_rollup`), else None.  ``cut``
+        is None for a pure-prefix range; for a range ending past either
+        watermark it is ``min(stats hi, hist watermark)`` floored to
+        the lcm(window, slice) grid (which divides ``step``, both being
+        divisors of it), so windows and slices below it tile whole
+        buckets and nothing double-counts against the tail scan."""
+        r = self._routable("stats", mt, buckets.start, buckets.step)
+        h = self._routable("hist", mt, buckets.start, buckets.step)
+        if r is None or h is None or buckets.start % buckets.step != 0:
+            return None
+        cut0 = min(r.watermark, h.watermark)
+        cut: int | None = None
+        if buckets.start + buckets.step * buckets.count > cut0:
+            lcm = math.lcm(r.grid_ms, h.grid_ms)
+            cut = buckets.start + ((cut0 - buckets.start) // lcm) * lcm
+            if cut <= buckets.start:
+                return None
+        return r, h, cut
+
+    def _hist_union(self, mt: str, tenant_id, metric, buckets: Buckets,
+                    gate, keep_metric: bool = False, fill: str = ""):
+        """UNION ALL body of the fused histogram routes, plus the
+        quantile-expression builder over its bins: stats-rollup window
+        partials and histogram ``(bin, c)`` structs below ``cut`` (the
+        whole grid for a pure prefix), the ``fill`` fragment, and — for
+        a crossing range — ONE pruned open-tail raw scan whose point
+        rows are degenerate partials for BOTH sides at once
+        (min=max=sum=value/samples=1 and a ``(bin, 1)`` entry), so the
+        union still merges in a single hash-agg with no join and no
+        window.  Every branch carries the same positional ``_hb``."""
+        r, h, cut = gate
+        lo = h.params["lo"]
+        n_bins = h.params["n_bins"]
+        w_bin = (h.params["hi"] - lo) / n_bins
+        grid_end = buckets.start + buckets.step * buckets.count
+        pv = self._bind_served_view(f"p_{mt}", r.df)
+        hv = self._bind_served_view(f"h_{mt}", h.df)
+        cols = "metric,\n       " if keep_metric else ""
+        frags = [
+            self._prefix_frag(tenant_id, metric, buckets, cut=cut,
+                              keep_metric=keep_metric, extra=_NULL_HB,
+                              view=pv),
+            f"""
+SELECT {cols}cast((slice_start - {buckets.start}L) / {buckets.step}L as bigint) AS bucket_idx,
+       cast(null as double) AS `min`, cast(null as double) AS `max`,
+       cast(null as double) AS `sum`, cast(null as bigint) AS samples,
+       named_struct('bin', cast(bin as int), 'c', cast(count as bigint)) AS _hb
+FROM {hv}
+WHERE tenant_id = {_sql_str(tenant_id)} AND {self._metric_pred(metric)}
+  AND slice_start >= {buckets.start}L
+  AND slice_start < {grid_end if cut is None else cut}L""",
+        ]
+        if fill:
+            frags.append(fill)
+        if cut is not None:
+            # cut on the slice grid ⇒ slice_start < cut means the whole
+            # slice is inside the finalized prefix
+            tail_hb = (
+                ",\n       named_struct('bin', cast(least(greatest("
+                f"floor((cast(value as double) - {lo!r}d) / {w_bin!r}d), "
+                f"0), {n_bins - 1}) as int), 'c', cast(1 as bigint)) AS _hb"
+            )
+            tv = self._tail_view(mt, tenant_id, cut)
+            frags.append(self._tail_frag(metric, buckets, cut,
+                                         keep_metric=keep_metric,
+                                         extra=tail_hb, view=tv))
+
+        def quantile(q: float, name: str) -> str:
+            return _hist_quantile_expr(q, name, lo, w_bin)
+
+        return "\nUNION ALL\n".join(frags), quantile
+
+    @staticmethod
+    def _hist_select(head: list[str], percentiles: Sequence[float],
+                     include_median: bool, quantile) -> str:
+        """Select list of the fused histogram routes, in the exact
+        path's column order: ``head`` (keys, min, avg), the median,
+        max/sum/samples, then one estimate per distinct percentile."""
+        cols = list(head)
+        if include_median:
+            cols.append(quantile(50.0, "median"))
+        cols += ["`max`", "`sum`", "samples"]
+        cols += [quantile(q, n) for n, q in _pct_names(percentiles).items()]
+        return ", ".join(cols)
+
     def _hist_fused_stats(
         self, tenant_id, metric, buckets: Buckets,
         percentiles: Sequence[float], include_median: bool,
@@ -1014,118 +1082,31 @@ WHERE ts >= {max(tail_lo, buckets.start)}L AND ts < {buckets.end}L
         A range ENDING past either finality watermark keeps the same
         shape (r8): the finalized prefix ``[start, cut)`` comes from
         both rollups, the open tail ``[cut, grid_end)`` from ONE pruned
-        raw scan whose point rows are degenerate partials for BOTH
-        sides at once — min=max=sum=value/samples=1 for the base
-        columns and a ``(bin, 1)`` histogram entry — so the union still
-        merges in a single hash-agg with no join and no window.  ``cut``
-        is ``min(stats hi, hist watermark)`` floored to the
-        lcm(window, slice) grid (which divides ``step``, both being
-        divisors of it), so windows and slices below it tile whole
-        buckets and nothing double-counts against the tail scan.
+        raw scan (see :meth:`_hist_fused_gate` / :meth:`_hist_union`).
         Returns None (caller falls back to the join path, then exact)
-        unless both rollups are attached and aligned, the range starts
-        in finalized territory, and a crossing range passes the hybrid
-        cost gate."""
-        entry_r = self._rollups.get(MetricType.GAUGE)
-        entry_h = self._hist_rollups.get(MetricType.GAUGE)
-        if entry_r is None or entry_h is None:
+        unless both rollups are attached and aligned and the range
+        starts in finalized territory."""
+        gate = self._hist_fused_gate(MetricType.GAUGE, buckets)
+        if gate is None or any(not 0 < q <= 100 for q in percentiles):
             return None
-        rollup, win_ms, hi_r = entry_r[0], entry_r[1], entry_r[2]
-        hists, slice_ms, lo, hi, n_bins, watermark = entry_h[:6]
-        if (
-            buckets.step % win_ms != 0
-            or buckets.start % win_ms != 0
-            or buckets.step % slice_ms != 0
-            or buckets.start % slice_ms != 0
-            or buckets.start % buckets.step != 0
-        ):
-            return None
-        grid_end = buckets.start + buckets.step * buckets.count
-        if hi_r is None or watermark is None:
-            return None
-        cut0 = min(hi_r, watermark)
-        if cut0 <= buckets.start:
-            return None
-        cut: int | None = None
-        if grid_end > cut0:
-            import math as _math
-
-            lcm = win_ms * slice_ms // _math.gcd(win_ms, slice_ms)
-            cut = buckets.start + ((cut0 - buckets.start) // lcm) * lcm
-            if cut <= buckets.start:
-                return None
-            if not self._hybrid_profitable(entry_r, buckets, 1):
-                return None
-        qs = list(dict.fromkeys(percentiles))
-        if include_median:
-            qs = [50.0, *[q for q in qs if q != 50.0]]
-        if any(not 0 < q <= 100 for q in qs):
-            return None
-        from rhq_metrics_spark.operators.stats import percentile_col_name
-
         # The WHOLE fused plan is composed as ONE SQL text parsed in a
         # single spark.sql call (r9): the remaining Column-API assembly
         # (filters, unionByName x3, groupBy/agg, withColumn) still cost
         # ~150 ms of Py4J plan construction per request on top of the
         # r8 selectExpr work — at serving latency that rivaled the
         # aggregation itself (VERDICT r8 item 2).
-        bin_struct_t = "struct<bin:int,c:bigint>"
-        null_hb = f",\n       cast(null as {bin_struct_t}) AS _hb"
-        w_bin = (hi - lo) / n_bins
-        pv = self._bind_served_view("p_" + str(MetricType.GAUGE), rollup)
-        hv = self._bind_served_view("h_" + str(MetricType.GAUGE), hists)
-        frags = [
-            self._prefix_frag(tenant_id, metric, buckets, cut=cut,
-                              extra=null_hb, view=pv),
-            f"""
-SELECT cast((slice_start - {buckets.start}L) / {buckets.step}L as bigint) AS bucket_idx,
-       cast(null as double) AS `min`, cast(null as double) AS `max`,
-       cast(null as double) AS `sum`, cast(null as bigint) AS samples,
-       named_struct('bin', cast(bin as int), 'c', cast(count as bigint)) AS _hb
-FROM {hv}
-WHERE tenant_id = {_sql_str(tenant_id)} AND {self._metric_pred(metric)}
-  AND slice_start >= {buckets.start}L
-  AND slice_start < {grid_end if cut is None else cut}L""",
-            f"""
-SELECT id AS bucket_idx, cast(null as double) AS `min`,
-       cast(null as double) AS `max`, cast(null as double) AS `sum`,
-       cast(0 as bigint) AS samples{null_hb}
-FROM range({buckets.count})""",
-        ]
-        if cut is not None:
-            # cut on the slice grid ⇒ slice_start < cut means the whole
-            # slice is inside the finalized prefix; the open tail's
-            # point rows are degenerate partials for BOTH sides at once
-            tail_hb = (
-                ",\n       named_struct('bin', cast(least(greatest("
-                f"floor((cast(value as double) - {lo!r}d) / {w_bin!r}d), "
-                f"0), {n_bins - 1}) as int), 'c', cast(1 as bigint)) AS _hb"
-            )
-            tv = self._tail_view(MetricType.GAUGE, tenant_id, cut)
-            frags.append(self._tail_frag(metric, buckets, cut,
-                                         extra=tail_hb, view=tv))
-
-        def _quantile(q: float, name: str) -> str:
-            return _hist_quantile_expr(q, name, lo, w_bin)
-
-        cols = [
+        body, quantile = self._hist_union(
+            MetricType.GAUGE, tenant_id, metric, buckets, gate,
+            fill=self._zeros_frag(buckets, _NULL_HB),
+        )
+        cols = self._hist_select([
             f"{buckets.start}L + bucket_idx * {buckets.step}L AS `start`",
             f"{buckets.start}L + (bucket_idx + 1) * {buckets.step}L AS `end`",
             "`min`",
             "CASE WHEN samples > 0 THEN `sum` / samples END AS avg",
-        ]
-        if include_median:
-            cols.append(_quantile(50.0, "median"))
-        cols += ["`max`", "`sum`", "samples"]
-        emitted = set()
-        for q in percentiles:
-            name = percentile_col_name(q)
-            if name not in emitted:
-                emitted.add(name)
-                cols.append(_quantile(q, name))
-        body = "\nUNION ALL\n".join(frags)
+        ], percentiles, include_median, quantile)
         return self._serving_spark().sql(f"""
-SELECT {", ".join(cols)}
+SELECT {cols}
 FROM (SELECT *, aggregate(_bins, cast(0 as bigint), (a, x) -> a + x.c) AS _total
       FROM (SELECT bucket_idx, min(`min`) AS `min`, max(`max`) AS `max`,
                    sum(`sum`) AS `sum`, sum(samples) AS samples,
@@ -1156,8 +1137,6 @@ FROM (SELECT *, aggregate(_bins, cast(0 as bigint), (a, x) -> a + x.c) AS _total
         )
         if pct is None:
             return None
-        from rhq_metrics_spark.operators.stats import percentile_col_name
-
         base = None
         if use_rollup:
             base = self._rollup_routed_stats(
@@ -1179,12 +1158,7 @@ FROM (SELECT *, aggregate(_bins, cast(0 as bigint), (a, x) -> a + x.c) AS _total
         if include_median:
             cols.append(F.col("p50").alias("median"))
         cols += [F.col("max"), F.col("sum"), F.col("samples")]
-        emitted = set()
-        for q in percentiles:
-            col = percentile_col_name(q)
-            if col not in emitted:
-                emitted.add(col)
-                cols.append(F.col(col))
+        cols += [F.col(c) for c in _pct_names(percentiles)]
         return out.select(*cols)
 
     def try_routed_stats(
@@ -1215,17 +1189,8 @@ FROM (SELECT *, aggregate(_bins, cast(0 as bigint), (a, x) -> a + x.c) AS _total
         watermark get the same hybrid prefix+open-tail merge as
         :meth:`_rollup_routed_stats` — one pruned tail scan covers every
         requested series."""
-        entry = self._rollups.get(metric_type)
-        if entry is None:
-            return None
-        rollup, win_ms, hi = entry[0], entry[1], entry[2]
-        if buckets.step % win_ms != 0 or buckets.start % win_ms != 0:
-            return None
-        if hi is None or buckets.start >= hi:
-            return None
-        if buckets.end > hi and not self._hybrid_profitable(
-            entry, buckets, len(metrics)
-        ):
+        a = self._routable("stats", metric_type, buckets.start, buckets.step)
+        if a is None:
             return None
         # Partials union (windows + optional open tail) → one hash-agg,
         # as in _rollup_routed_stats, composed as ONE SQL text (r9, same
@@ -1235,16 +1200,8 @@ FROM (SELECT *, aggregate(_bins, cast(0 as bigint), (a, x) -> a + x.c) AS _total
         # measured SLOWER here (the per-query local zeros relation + a
         # per-metric window cost more than one broadcast join over the
         # tiny agg output at the 100-metric dashboard shape).
-        pv = self._bind_served_view(f"p_{metric_type}", rollup)
-        frags = [self._prefix_frag(
-            tenant_id, list(metrics), buckets, keep_metric=True, view=pv
-        )]
-        if buckets.end > hi:
-            tv = self._tail_view(metric_type, tenant_id, hi)
-            frags.append(self._tail_frag(
-                list(metrics), buckets, hi, keep_metric=True, view=tv
-            ))
-        body = "\nUNION ALL\n".join(frags)
+        body = self._stats_union(a, metric_type, tenant_id, list(metrics),
+                                 buckets, keep_metric=True)
         rolled_sql = f"""
 SELECT metric, bucket_idx, min(`min`) AS `min`, max(`max`) AS `max`,
        sum(`sum`) AS `sum`, sum(samples) AS samples,
@@ -1280,11 +1237,10 @@ LEFT JOIN rolled r ON r.metric = m.metric AND r.bucket_idx = d.id""")
         shape of :meth:`_hist_fused_stats` with ``metric`` in the group
         key: stats-rollup window partials, histogram bin structs, and —
         for a range crossing ``min(stats hi, hist watermark)`` (cut on
-        the lcm grid, hybrid cost gate applied) — raw open-tail rows
-        carrying BOTH degenerate base partials and ``(bin, 1)`` entries
-        union into ONE aggregation; every quantile is a JVM
-        higher-order ``aggregate`` projection.  No windows, no explode
-        (the first cut of this route went through
+        the lcm grid) — raw open-tail rows carrying BOTH degenerate base
+        partials and ``(bin, 1)`` entries union into ONE aggregation;
+        every quantile is a JVM higher-order ``aggregate`` projection.
+        No windows, no explode (the first cut of this route went through
         ``histogram_quantiles``' window machinery and was measured
         SLOWER than the exact raw scan at bench scale — 1.5 s vs 0.77 s
         for the 100-series dashboard; the fused shape serves it in one
@@ -1293,105 +1249,39 @@ LEFT JOIN rolled r ON r.metric = m.metric AND r.bucket_idx = d.id""")
         exact raw path.  Output schema matches
         ``numeric_bucket_stats(group_cols=['metric'])`` with ``metric``
         first."""
-        entry_r = self._rollups.get(MetricType.check(metric_type))
-        entry_h = self._hist_rollups.get(MetricType.check(metric_type))
-        if entry_r is None or entry_h is None:
-            return None
         if not (percentiles or include_median):
             return None
-        rollup, win_ms, hi_r = entry_r[0], entry_r[1], entry_r[2]
-        hists, slice_ms, lo, hi, n_bins, watermark = entry_h[:6]
-        if (
-            buckets.step % win_ms != 0
-            or buckets.start % win_ms != 0
-            or buckets.step % slice_ms != 0
-            or buckets.start % slice_ms != 0
-            or buckets.start % buckets.step != 0
-        ):
-            return None
-        if hi_r is None or watermark is None:
-            return None
-        grid_end = buckets.start + buckets.step * buckets.count
-        cut0 = min(hi_r, watermark)
-        if cut0 <= buckets.start:
-            return None
-        cut: int | None = None
-        if grid_end > cut0:
-            import math as _math
-
-            lcm = win_ms * slice_ms // _math.gcd(win_ms, slice_ms)
-            cut = buckets.start + ((cut0 - buckets.start) // lcm) * lcm
-            if cut <= buckets.start:
-                return None
-            if not self._hybrid_profitable(entry_r, buckets, len(metrics)):
-                return None
-        if any(not 0 < q <= 100 for q in percentiles):
+        mt = MetricType.check(metric_type)
+        gate = self._hist_fused_gate(mt, buckets)
+        if gate is None or any(not 0 < q <= 100 for q in percentiles):
             return None
         # the WHOLE route as one SQL text (r9 — same constant-killer as
         # the fused single-metric path): partials union → one hash-agg
         # keyed (metric, bucket_idx), then the per-metric grid fill as
         # the multi shape's one broadcast join; missing cells get
         # samples 0, an empty _bins, and therefore null estimates
-        bin_struct_t = "struct<bin:int,c:bigint>"
-        null_hb = f",\n       cast(null as {bin_struct_t}) AS _hb"
-        w_bin = (hi - lo) / n_bins
-        metric_list = ", ".join(_sql_str(m) for m in metrics)
-        pv = self._bind_served_view(f"p_{metric_type}", rollup)
-        hv = self._bind_served_view(f"h_{metric_type}", hists)
-        frags = [
-            self._prefix_frag(tenant_id, list(metrics), buckets, cut=cut,
-                              keep_metric=True, extra=null_hb, view=pv),
-            f"""
-SELECT metric,
-       cast((slice_start - {buckets.start}L) / {buckets.step}L as bigint) AS bucket_idx,
-       cast(null as double) AS `min`, cast(null as double) AS `max`,
-       cast(null as double) AS `sum`, cast(null as bigint) AS samples,
-       named_struct('bin', cast(bin as int), 'c', cast(count as bigint)) AS _hb
-FROM {hv}
-WHERE tenant_id = {_sql_str(tenant_id)} AND metric IN ({metric_list})
-  AND slice_start >= {buckets.start}L
-  AND slice_start < {grid_end if cut is None else cut}L""",
-        ]
-        if cut is not None:
-            tail_hb = (
-                ",\n       named_struct('bin', cast(least(greatest("
-                f"floor((cast(value as double) - {lo!r}d) / {w_bin!r}d), "
-                f"0), {n_bins - 1}) as int), 'c', cast(1 as bigint)) AS _hb"
-            )
-            tv = self._tail_view(metric_type, tenant_id, cut)
-            frags.append(self._tail_frag(
-                list(metrics), buckets, cut, keep_metric=True,
-                extra=tail_hb, view=tv
-            ))
-        cols = [
+        body, quantile = self._hist_union(
+            mt, tenant_id, list(metrics), buckets, gate, keep_metric=True
+        )
+        cols = self._hist_select([
             "metric", "`start`", "`end`", "`min`",
             "CASE WHEN samples > 0 THEN `sum` / samples END AS avg",
-        ]
-        if include_median:
-            cols.append(_hist_quantile_expr(50.0, "median", lo, w_bin))
-        cols += ["`max`", "`sum`", "samples"]
-        emitted = set()
-        for q in percentiles:
-            name = percentile_col_name(q)
-            if name not in emitted:
-                emitted.add(name)
-                cols.append(_hist_quantile_expr(q, name, lo, w_bin))
-        body = "\nUNION ALL\n".join(frags)
+        ], percentiles, include_median, quantile)
         return self._serving_spark().sql(f"""
 WITH rolled AS (
   SELECT metric, bucket_idx, min(`min`) AS `min`, max(`max`) AS `max`,
          sum(`sum`) AS `sum`, sum(samples) AS samples,
          sort_array(collect_list(_hb)) AS _bins
   FROM ({body}) GROUP BY metric, bucket_idx)
-SELECT {", ".join(cols)}
+SELECT {cols}
 FROM (
   SELECT /*+ BROADCAST(r) */ m.metric,
          {buckets.start}L + d.id * {buckets.step}L AS `start`,
          {buckets.start}L + (d.id + 1) * {buckets.step}L AS `end`,
          r.`min`, r.`max`, r.`sum`,
          coalesce(r.samples, cast(0 as bigint)) AS samples,
-         coalesce(r._bins, cast(array() as array<{bin_struct_t}>)) AS _bins,
-         aggregate(coalesce(r._bins, cast(array() as array<{bin_struct_t}>)),
+         coalesce(r._bins, cast(array() as array<{_BIN_STRUCT_T}>)) AS _bins,
+         aggregate(coalesce(r._bins, cast(array() as array<{_BIN_STRUCT_T}>)),
                    cast(0 as bigint), (a, x) -> a + x.c) AS _total
   FROM (SELECT DISTINCT metric FROM rolled) m
   CROSS JOIN range({buckets.count}) d
@@ -1413,13 +1303,7 @@ FROM (
         the routed path while the exact ``stacked_stats(fill_empty)``
         path returns the full samples=0 grid — response shape depended
         on whether rollups were attached (ADVICE r8)."""
-        pcols = []
-        emitted = set()
-        for q in percentiles:
-            col = percentile_col_name(q)
-            if col not in emitted:
-                emitted.add(col)
-                pcols.append(col)
+        pcols = list(_pct_names(percentiles))
         value_cols = (
             ["min", "avg"] + (["median"] if include_median else [])
             + ["max", "sum"] + pcols
@@ -1918,44 +1802,30 @@ FROM (
     # -- availability (A2/A7) -----------------------------------------------------
 
     def availability_stats(self, tenant_id, metric, buckets: Buckets) -> DataFrame:
-        if self._avail_rollup is not None:
-            df, slice_ms, watermark = self._avail_rollup[:3]
-            if (
-                buckets.step % slice_ms == 0 and buckets.start % slice_ms == 0
-                and watermark is not None and buckets.start < watermark
-            ):
-                from rhq_metrics_spark.operators.availability import (
-                    availability_from_rollup,
-                    availability_rollup,
-                )
+        a = self._routable("avail", MetricType.AVAILABILITY,
+                           buckets.start, buckets.step)
+        if a is not None:
+            from rhq_metrics_spark.model import AvailabilityType
+            from rhq_metrics_spark.operators.availability import (
+                availability_from_rollup,
+                availability_rollup,
+            )
 
-                # single-series filter, then merge UNGROUPED so empty
-                # buckets fill exactly like the raw path (a grouped fill
-                # over zero partial rows would emit nothing)
-                mine = df.filter(
-                    (F.col("tenant_id") == tenant_id)
-                    & (F.col("metric") == metric)
-                ).drop("tenant_id", "metric")
-                if buckets.end > watermark:
-                    # hybrid (see _increase_routed): raw open-tail points
-                    # become per-slice pseudo-partials via the same
-                    # deterministic builder; the cross-slice state-machine
-                    # reconstruction treats the watermark like any other
-                    # slice boundary
-                    from rhq_metrics_spark.model import AvailabilityType
-
-                    tail = availability_rollup(
-                        self._tail_scan(MetricType.AVAILABILITY, tenant_id,
-                                        metric, watermark, buckets.end),
-                        slice_ms,
-                    )
-                    cols = ["slice_start", "f_ts", "f_state", "l_ts",
-                            "l_state",
-                            *[f"{s}_dur" for s in AvailabilityType.ALL],
-                            "nuc_interior", "last_not_up_ts",
-                            "last_recovery_ts", "samples"]
-                    mine = mine.select(*cols).unionByName(tail.select(*cols))
-                return availability_from_rollup(mine, buckets, slice_ms)
+            # single-series filter, then merge UNGROUPED so empty
+            # buckets fill exactly like the raw path (a grouped fill
+            # over zero partial rows would emit nothing); the
+            # cross-slice state-machine reconstruction treats the
+            # watermark like any other slice boundary
+            return self._slice_routed(
+                a, MetricType.AVAILABILITY, tenant_id, metric, None,
+                buckets.end,
+                ["slice_start", "f_ts", "f_state", "l_ts", "l_state",
+                 *[f"{s}_dur" for s in AvailabilityType.ALL],
+                 "nuc_interior", "last_not_up_ts", "last_recovery_ts",
+                 "samples"],
+                lambda pts: availability_rollup(pts, a.grid_ms),
+                lambda mine: availability_from_rollup(mine, buckets, a.grid_ms),
+            )
         pts = self._scan(
             MetricType.AVAILABILITY, tenant_id, metric, buckets.start, buckets.end
         )
@@ -2450,15 +2320,30 @@ FROM (
         (:meth:`attach_increase_rollup`) an aligned, finalized request
         is served EXACTLY from the partials — bit-identical merge, no
         raw-point scan."""
-        from rhq_metrics_spark.operators.rate import bucket_increase
+        from rhq_metrics_spark.operators.rate import (
+            bucket_increase,
+            increase_from_rollup,
+            increase_rollup,
+        )
 
         counter = metric_type == MetricType.COUNTER
-        routed = self._increase_routed(
-            metric_type, tenant_id, metric, start, end, bucket_ms,
-            value_scale, counter,
-        )
-        if routed is not None:
-            return routed
+        a = self._routable("increase", MetricType.check(metric_type), start,
+                           bucket_ms, end, value_scale=value_scale)
+        if a is not None:
+            keys = ["tenant_id", "metric"]
+            return self._slice_routed(
+                a, metric_type, tenant_id, metric, start, end,
+                [*keys, "slice_start", "f_ts", "f_v", "l_ts", "l_v", "inc",
+                 "n_pairs"],
+                lambda pts: increase_rollup(
+                    pts, a.grid_ms, value_scale=value_scale,
+                    group_cols=keys, counter=counter,
+                ),
+                lambda mine: increase_from_rollup(
+                    mine, bucket_ms, a.grid_ms, value_scale=value_scale,
+                    group_cols=keys, counter=counter,
+                ).drop("tenant_id"),
+            )
         pts = self._scan(metric_type, tenant_id, metric, start, end)
         return bucket_increase(
             pts,
@@ -2481,86 +2366,13 @@ FROM (
         decided at query time from the metric type, so attach partials
         built with the matching mode (counter partials for counter
         metrics)."""
-        path = partials if isinstance(partials, str) else None
-        df = self.spark.read.parquet(partials) if path else partials
-        df = df.withColumn("slice_start", F.col("slice_start").cast("long"))
-        slice_ms = int(slice_ms)
-        bad = df.filter(F.col("slice_start") % slice_ms != 0)
-        if bad.limit(1).count() > 0:
-            raise ValueError(
-                f"increase partials are not aligned {slice_ms}ms slices"
-            )
-        hi_w = df.agg(F.max("slice_start").alias("hi")).collect()[0]["hi"]
-        watermark = None if hi_w is None else int(hi_w) + slice_ms
-        self._increase_rollups[MetricType.check(metric_type)] = (
-            df, slice_ms, int(value_scale), watermark, path,
+        s = int(slice_ms)
+        self._attach(
+            "increase", MetricType.check(metric_type), partials, s,
+            F.col("slice_start") % s != 0,
+            f"increase partials are not aligned {s}ms slices",
+            value_scale=int(value_scale),
         )
-
-    def refresh_increase_watermark(self, metric_type: str) -> int | None:
-        """Cheap watermark refresh for an appending increase-partials
-        sink (re-resolves path-attached tables; one aggregation, no
-        re-validation).  Mirrors :meth:`refresh_rollup_watermark`."""
-        entry = self._increase_rollups.get(MetricType.check(metric_type))
-        if entry is None:
-            return None
-        df, slice_ms, scale, _, path = entry
-        if path is not None:
-            self.spark.catalog.refreshByPath(path)
-            df = self.spark.read.parquet(path).withColumn(
-                "slice_start", F.col("slice_start").cast("long")
-            )
-        hi_w = df.agg(F.max("slice_start").alias("hi")).collect()[0]["hi"]
-        watermark = None if hi_w is None else int(hi_w) + slice_ms
-        self._increase_rollups[metric_type] = (
-            df, slice_ms, scale, watermark, path,
-        )
-        return watermark
-
-    def _increase_routed(
-        self, metric_type, tenant_id, metric, start, end, bucket_ms,
-        value_scale, counter,
-    ) -> DataFrame | None:
-        """Exact increase() from attached partials when the request
-        tiles the slice grid; None → raw.  A range ending past the
-        finality watermark is served HYBRID: the open tail's raw points
-        become per-slice pseudo-partials through the SAME builder
-        (``increase_rollup`` is deterministic, so they are bit-identical
-        to what compaction would write), union with the finalized
-        partials, and the ordinary cross-slice merge reconstructs the
-        watermark-bridging pair like any other slice boundary."""
-        entry = self._increase_rollups.get(MetricType.check(metric_type))
-        if entry is None:
-            return None
-        df, slice_ms, att_scale, watermark = entry[:4]
-        if att_scale != value_scale:
-            return None
-        if bucket_ms % slice_ms != 0 or start % slice_ms != 0 or end % slice_ms != 0:
-            return None
-        if watermark is None or start >= watermark:
-            return None
-        from rhq_metrics_spark.operators.rate import (
-            increase_from_rollup,
-            increase_rollup,
-        )
-
-        mine = df.filter(
-            (F.col("tenant_id") == tenant_id) & (F.col("metric") == metric)
-            & (F.col("slice_start") >= start) & (F.col("slice_start") < end)
-        )
-        cols = ["tenant_id", "metric", "slice_start",
-                "f_ts", "f_v", "l_ts", "l_v", "inc", "n_pairs"]
-        if end > watermark:
-            tail = increase_rollup(
-                self._tail_scan(metric_type, tenant_id, metric,
-                                watermark, end),
-                slice_ms, value_scale=value_scale,
-                group_cols=["tenant_id", "metric"], counter=counter,
-            )
-            mine = mine.select(*cols).unionByName(tail.select(*cols))
-        return increase_from_rollup(
-            mine, bucket_ms, slice_ms, value_scale=value_scale,
-            group_cols=["tenant_id", "metric"], counter=counter,
-        ).drop("tenant_id")
 
     def time_weighted_avg(
         self,
@@ -2579,46 +2391,30 @@ FROM (
         (:meth:`attach_twa_rollup`) an aligned, finalized request is
         served EXACTLY from the partials — bit-identical merge, zero
         raw-point reads."""
-        entry = self._twa_rollups.get(MetricType.check(metric_type))
-        if entry is not None:
-            df, slice_ms, att_scale, att_gap, watermark = entry[:5]
-            if (
-                att_scale == value_scale and att_gap == max_gap_ms
-                and bucket_ms % slice_ms == 0
-                and start % slice_ms == 0 and end % slice_ms == 0
-                and watermark is not None and start < watermark
-            ):
-                from rhq_metrics_spark.operators.rate import (
-                    twa_from_rollup,
-                    twa_rollup,
-                )
+        from rhq_metrics_spark.operators.rate import (
+            time_weighted_avg,
+            twa_from_rollup,
+            twa_rollup,
+        )
 
-                mine = df.filter(
-                    (F.col("tenant_id") == tenant_id)
-                    & (F.col("metric") == metric)
-                    & (F.col("slice_start") >= start)
-                    & (F.col("slice_start") < end)
-                )
-                if end > watermark:
-                    # hybrid (see _increase_routed): tail raw points →
-                    # pseudo-partials via the same deterministic builder
-                    cols = ["tenant_id", "metric", "slice_start", "f_ts",
-                            "f_v", "l_ts", "l_v", "wsum", "held_ms",
-                            "n_pairs"]
-                    tail = twa_rollup(
-                        self._tail_scan(metric_type, tenant_id, metric,
-                                        watermark, end),
-                        slice_ms, value_scale=value_scale,
-                        group_cols=["tenant_id", "metric"],
-                        max_gap_ms=max_gap_ms,
-                    )
-                    mine = mine.select(*cols).unionByName(tail.select(*cols))
-                return twa_from_rollup(
-                    mine, bucket_ms, slice_ms, value_scale=value_scale,
-                    group_cols=["tenant_id", "metric"], max_gap_ms=max_gap_ms,
-                ).drop("tenant_id")
-        from rhq_metrics_spark.operators.rate import time_weighted_avg
-
+        a = self._routable("twa", MetricType.check(metric_type), start,
+                           bucket_ms, end, value_scale=value_scale,
+                           max_gap_ms=max_gap_ms)
+        if a is not None:
+            keys = ["tenant_id", "metric"]
+            return self._slice_routed(
+                a, metric_type, tenant_id, metric, start, end,
+                [*keys, "slice_start", "f_ts", "f_v", "l_ts", "l_v", "wsum",
+                 "held_ms", "n_pairs"],
+                lambda pts: twa_rollup(
+                    pts, a.grid_ms, value_scale=value_scale,
+                    group_cols=keys, max_gap_ms=max_gap_ms,
+                ),
+                lambda mine: twa_from_rollup(
+                    mine, bucket_ms, a.grid_ms, value_scale=value_scale,
+                    group_cols=keys, max_gap_ms=max_gap_ms,
+                ).drop("tenant_id"),
+            )
         pts = self._scan(metric_type, tenant_id, metric, start, end)
         return time_weighted_avg(
             pts, bucket_ms, value_scale=value_scale, max_gap_ms=max_gap_ms
@@ -2633,38 +2429,13 @@ FROM (
         serving fast path for :meth:`time_weighted_avg`.  ``value_scale``
         and ``max_gap_ms`` must match the query's — mismatches fall back
         to raw rather than serving subtly different semantics."""
-        path = partials if isinstance(partials, str) else None
-        df = self.spark.read.parquet(partials) if path else partials
-        df = df.withColumn("slice_start", F.col("slice_start").cast("long"))
-        slice_ms = int(slice_ms)
-        bad = df.filter(F.col("slice_start") % slice_ms != 0)
-        if bad.limit(1).count() > 0:
-            raise ValueError(
-                f"TWA partials are not aligned {slice_ms}ms slices"
-            )
-        hi_w = df.agg(F.max("slice_start").alias("hi")).collect()[0]["hi"]
-        watermark = None if hi_w is None else int(hi_w) + slice_ms
-        self._twa_rollups[MetricType.check(metric_type)] = (
-            df, slice_ms, int(value_scale), max_gap_ms, watermark, path,
+        s = int(slice_ms)
+        self._attach(
+            "twa", MetricType.check(metric_type), partials, s,
+            F.col("slice_start") % s != 0,
+            f"TWA partials are not aligned {s}ms slices",
+            value_scale=int(value_scale), max_gap_ms=max_gap_ms,
         )
-
-    def refresh_twa_watermark(self, metric_type: str) -> int | None:
-        """Cheap watermark refresh for an appending TWA-partials sink."""
-        entry = self._twa_rollups.get(MetricType.check(metric_type))
-        if entry is None:
-            return None
-        df, slice_ms, scale, gap, _, path = entry
-        if path is not None:
-            self.spark.catalog.refreshByPath(path)
-            df = self.spark.read.parquet(path).withColumn(
-                "slice_start", F.col("slice_start").cast("long")
-            )
-        hi_w = df.agg(F.max("slice_start").alias("hi")).collect()[0]["hi"]
-        watermark = None if hi_w is None else int(hi_w) + slice_ms
-        self._twa_rollups[metric_type] = (
-            df, slice_ms, scale, gap, watermark, path,
-        )
-        return watermark
 
     def attach_availability_rollup(self, partials, slice_ms: int) -> None:
         """Register per-slice availability partials
@@ -2673,34 +2444,12 @@ FROM (
         fast path for :meth:`availability_stats` — the state machine
         reconstructs bit-identically from boundary points + interior
         holds, so routing needs no accuracy opt-in."""
-        path = partials if isinstance(partials, str) else None
-        df = self.spark.read.parquet(partials) if path else partials
-        df = df.withColumn("slice_start", F.col("slice_start").cast("long"))
-        slice_ms = int(slice_ms)
-        bad = df.filter(F.col("slice_start") % slice_ms != 0)
-        if bad.limit(1).count() > 0:
-            raise ValueError(
-                f"availability partials are not aligned {slice_ms}ms slices"
-            )
-        hi_w = df.agg(F.max("slice_start").alias("hi")).collect()[0]["hi"]
-        watermark = None if hi_w is None else int(hi_w) + slice_ms
-        self._avail_rollup = (df, slice_ms, watermark, path)
-
-    def refresh_availability_watermark(self) -> int | None:
-        """Cheap watermark refresh for an appending availability-partials
-        sink."""
-        if self._avail_rollup is None:
-            return None
-        df, slice_ms, _, path = self._avail_rollup
-        if path is not None:
-            self.spark.catalog.refreshByPath(path)
-            df = self.spark.read.parquet(path).withColumn(
-                "slice_start", F.col("slice_start").cast("long")
-            )
-        hi_w = df.agg(F.max("slice_start").alias("hi")).collect()[0]["hi"]
-        watermark = None if hi_w is None else int(hi_w) + slice_ms
-        self._avail_rollup = (df, slice_ms, watermark, path)
-        return watermark
+        s = int(slice_ms)
+        self._attach(
+            "avail", MetricType.AVAILABILITY, partials, s,
+            F.col("slice_start") % s != 0,
+            f"availability partials are not aligned {s}ms slices",
+        )
 
     def register_sql_views(self, prefix: str = "metrics") -> list[str]:
         """Expose the store as Spark SQL temp views so users can query

@@ -182,15 +182,14 @@ def test_availability_hybrid_across_watermark(spark, tmp_path):
         group_cols=["tenant_id", "metric"],
     ).write.parquet(str(tmp_path / "avail"))
     svc.attach_availability_rollup(str(tmp_path / "avail"), slice_ms)
-    assert svc._avail_rollup[2] == wm
+    assert svc._attached["avail", "availability"].watermark == wm
 
     b = Buckets.from_step(0, 5_400_000, 1_800_000)  # bucket 1 straddles wm
     hybrid = svc.availability_stats("t", "svc1", b)
     assert any("points" in f for f in hybrid.inputFiles())
-    saved = svc._avail_rollup
-    svc._avail_rollup = None
+    saved = svc._attached.pop(("avail", "availability"))
     raw = svc.availability_stats("t", "svc1", b)
-    svc._avail_rollup = saved
+    svc._attached["avail", "availability"] = saved
     assert hybrid.columns == raw.columns
     got = [r.asDict() for r in hybrid.orderBy("start").collect()]
     exp = [r.asDict() for r in raw.orderBy("start").collect()]
@@ -288,10 +287,9 @@ def test_slo_burn_routed_through_availability_rollup(spark, tmp_path):
     assert not any("points" in f for f in routed.inputFiles())
     assert any("/avail" in f for f in routed.inputFiles())
 
-    saved = svc._avail_rollup
-    svc._avail_rollup = None
+    saved = svc._attached.pop(("avail", "availability"))
     raw = svc.slo_burn("t", "web", b, slo_ppm=990_000, fast_n=1, slow_n=3)
-    svc._avail_rollup = saved
+    svc._attached["avail", "availability"] = saved
     assert routed.columns == raw.columns
     got = [r.asDict() for r in routed.orderBy("start").collect()]
     exp = [r.asDict() for r in raw.orderBy("start").collect()]

@@ -206,7 +206,7 @@ def test_maintenance_emits_increase_partials(spark, tmp_path):
 
     routed = svc.increase("t", "reqs", 0, 2 * slice_ms, slice_ms)
     assert not any("points" in f for f in routed.inputFiles())
-    svc._increase_rollups.clear()
+    svc._attached.pop(("increase", "counter"))
     raw = svc.increase("t", "reqs", 0, 2 * slice_ms, slice_ms)
     got = {r["bucket_start"]: (r["n_pairs"], r["increase"]) for r in routed.collect()}
     exp = {r["bucket_start"]: (r["n_pairs"], r["increase"]) for r in raw.collect()}
@@ -248,7 +248,7 @@ def test_maintenance_emits_twa_and_availability_partials(spark, tmp_path):
 
     routed = svc.time_weighted_avg("t", "cpu", 0, 2 * slice_ms, slice_ms)
     assert not any("points" in f for f in routed.inputFiles())
-    svc._twa_rollups.clear()
+    svc._attached.pop(("twa", "gauge"))
     raw = svc.time_weighted_avg("t", "cpu", 0, 2 * slice_ms, slice_ms)
     assert any("points" in f for f in raw.inputFiles())
     got = {r["bucket_start"]: (r["n_pairs"], r["held_ms"], r["twa"])
@@ -260,7 +260,7 @@ def test_maintenance_emits_twa_and_availability_partials(spark, tmp_path):
     b = Buckets.from_step(0, 2 * slice_ms, slice_ms)
     av_routed = svc.availability_stats("t", "web", b)
     assert not any("points" in f for f in av_routed.inputFiles())
-    svc._avail_rollup = None
+    svc._attached.pop(("avail", "availability"))
     av_raw = svc.availability_stats("t", "web", b)
     cols = av_raw.columns
     assert av_routed.columns == cols
@@ -305,7 +305,7 @@ def test_recompaction_replaces_partials_not_double_appends(spark, tmp_path):
 
     routed = svc.increase("t", "reqs", 0, sm, sm)
     assert not any("points" in f for f in routed.inputFiles())
-    svc._increase_rollups.clear()
+    svc._attached.pop(("increase", "counter"))
     raw = svc.increase("t", "reqs", 0, sm, sm)
     got = {r["bucket_start"]: (r["n_pairs"], r["increase"]) for r in routed.collect()}
     exp = {r["bucket_start"]: (r["n_pairs"], r["increase"]) for r in raw.collect()}
@@ -897,3 +897,81 @@ def test_bm25_rebuild_dial_defers_under_unfolded_pieces(spark, svc, tmp_path):
     assert rows(bm25_against_index(spark, idx, qdf, k=5)) == rows(
         bm25_topk(grown, qdf, k=5)
     )
+
+
+@pytest.mark.parametrize("family", ["stats", "hist", "increase", "twa", "avail"])
+def test_attached_family_validates_alignment_and_refreshes(
+    spark, tmp_path, family
+):
+    """Every attached-rollup family: attach refuses misaligned partials
+    (a ValueError naming the alignment), and once a maintenance pass
+    appends a newer slice to a path-attached sink, a request inside that
+    slice is served from the partials with zero raw-point reads — the
+    pass advanced the watermark and re-resolved the sink's listing."""
+    import pyspark.sql.functions as F
+
+    from rhq_metrics_spark.model import Buckets
+
+    sm = 600_000
+    store = MetricsStore(spark, str(tmp_path / "store"), slice_ms=sm)
+    svc = MetricsService(spark, store)
+    sink = str(tmp_path / "sink")
+    mt, metric, vtype = {
+        "increase": ("counter", "reqs", "long"),
+        "avail": ("availability", "web", "string"),
+    }.get(family, ("gauge", "cpu", "double"))
+    runner = MaintenanceRunner(svc, **{
+        "stats": {"stats_sink": {"path": sink, "window_ms": sm}},
+        "hist": {"histogram_sink": {"path": sink, "lo": 0.0, "hi": 100.0,
+                                    "n_bins": 20}},
+        "increase": {"increase_sink": {"path": sink}},
+        "twa": {"twa_sink": {"path": sink}},
+        "avail": {"availability_sink": {"path": sink}},
+    }[family])
+    attach = {
+        "stats": lambda df: svc.attach_rollup(mt, df, sm),
+        "hist": lambda df: svc.attach_histogram_rollup(
+            mt, df, sm, 0.0, 100.0, 20),
+        "increase": lambda df: svc.attach_increase_rollup(mt, df, sm),
+        "twa": lambda df: svc.attach_twa_rollup(mt, df, sm),
+        "avail": lambda df: svc.attach_availability_rollup(df, sm),
+    }[family]
+    states = ["up", "down", "up", "unknown"]
+
+    def ingest(s):
+        rows = [("t", metric, s * sm + i * 60_000,
+                 states[(s + i) % 4] if vtype == "string"
+                 else s * 10 + i if vtype == "long"
+                 else float((s * 7 + i * 3) % 100), None)
+                for i in range(10)]
+        svc.add_data_points(mt, spark.createDataFrame(
+            rows, f"tenant_id string, metric string, ts long, value {vtype}, "
+                  "tags map<string,string>"))
+
+    ingest(0)
+    ingest(1)
+    runner.run_once(now_ms=2 * sm + runner.compaction_grace_ms)
+
+    written = spark.read.parquet(sink)
+    if family == "stats":
+        bad = written.withColumn(
+            "window_start", F.col("window_start") + F.expr("INTERVAL 1 SECOND"))
+    else:
+        bad = written.withColumn("slice_start", F.col("slice_start") + 1_000)
+    with pytest.raises(ValueError, match="aligned"):
+        attach(bad)
+
+    ingest(2)
+    runner.run_once(now_ms=3 * sm + runner.compaction_grace_ms)
+    b = Buckets.from_step(2 * sm, 3 * sm, sm)
+    served = {
+        "stats": lambda: svc.try_routed_stats(mt, "t", metric, b),
+        "hist": lambda: svc.percentiles_from_rollup(mt, "t", metric, b, (90,)),
+        "increase": lambda: svc.increase("t", metric, b.start, b.end, sm),
+        "twa": lambda: svc.time_weighted_avg("t", metric, b.start, b.end, sm),
+        "avail": lambda: svc.availability_stats("t", metric, b),
+    }[family]()
+    assert served is not None
+    files = served.inputFiles()
+    assert any(f"{tmp_path}/sink" in f for f in files), files
+    assert not any("points" in f for f in files), files

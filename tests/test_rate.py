@@ -235,7 +235,7 @@ def test_service_increase_routed_from_partials(spark, tmp_path):
     assert files and not any("points" in f for f in files), files
     raw = svc.increase("t", "reqs", 0, end, 1_200_000)  # same call routes...
     # force raw by detaching
-    svc._increase_rollups.clear()
+    svc._attached.pop(("increase", "counter"))
     raw = svc.increase("t", "reqs", 0, end, 1_200_000)
     assert any("points" in f for f in raw.inputFiles())
     got = {r["bucket_start"]: (r["n_pairs"], r["increase"]) for r in routed.collect()}
@@ -311,16 +311,15 @@ def test_increase_hybrid_across_watermark(spark, tmp_path):
         group_cols=["tenant_id", "metric"],
     ).write.parquet(str(tmp_path / "inc"))
     svc.attach_increase_rollup("counter", str(tmp_path / "inc"), slice_ms)
-    assert svc._increase_rollups["counter"][3] == wm
+    assert svc._attached["increase", "counter"].watermark == wm
 
     end = 6_000_000
     hybrid = svc.increase("t", "reqs", 0, end, 1_200_000)
     assert any("points" in f for f in hybrid.inputFiles())  # tail scan
     assert any("inc" in f for f in hybrid.inputFiles())     # partials too
-    saved = dict(svc._increase_rollups)
-    svc._increase_rollups.clear()
+    saved = svc._attached.pop(("increase", "counter"))
     raw = svc.increase("t", "reqs", 0, end, 1_200_000)
-    svc._increase_rollups.update(saved)
+    svc._attached["increase", "counter"] = saved
     got = {r["bucket_start"]: (r["n_pairs"], r["increase"]) for r in hybrid.collect()}
     exp = {r["bucket_start"]: (r["n_pairs"], r["increase"]) for r in raw.collect()}
     assert got == exp and len(got) == 5
@@ -361,10 +360,9 @@ def test_twa_hybrid_across_watermark(spark, tmp_path):
     end = 6_000_000
     hybrid = svc.time_weighted_avg("t", "load", 0, end, 1_200_000)
     assert any("points" in f for f in hybrid.inputFiles())
-    saved = dict(svc._twa_rollups)
-    svc._twa_rollups.clear()
+    saved = svc._attached.pop(("twa", "gauge"))
     raw = svc.time_weighted_avg("t", "load", 0, end, 1_200_000)
-    svc._twa_rollups.update(saved)
+    svc._attached["twa", "gauge"] = saved
     got = {r["bucket_start"]: (r["n_pairs"], r["held_ms"], r["twa"])
            for r in hybrid.collect()}
     exp = {r["bucket_start"]: (r["n_pairs"], r["held_ms"], r["twa"])

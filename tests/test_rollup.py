@@ -388,11 +388,10 @@ def test_stats_query_multi_metric_routed(spark, tmp_path):
     for stacked in (False, True):
         routed = svc.stats_query("t", b, {"gauge": metrics}, stacked=stacked,
                                  include_median=False)
-        svc_rollups = svc._rollups
-        svc._rollups = {}
+        saved = svc._attached.pop(("stats", "gauge"))
         raw = svc.stats_query("t", b, {"gauge": metrics}, stacked=stacked,
                               include_median=False)
-        svc._rollups = svc_rollups
+        svc._attached["stats", "gauge"] = saved
         assert routed["gauge"].keys() == raw["gauge"].keys()
         for m in raw["gauge"]:
             assert len(routed["gauge"][m]) == len(raw["gauge"][m])
@@ -542,11 +541,10 @@ def test_hybrid_rollup_multi_metric(spark, tmp_path):
     for stacked in (False, True):
         routed = svc.stats_query("t", b, {"gauge": metrics}, stacked=stacked,
                                  include_median=False)
-        saved = svc._rollups
-        svc._rollups = {}
+        saved = svc._attached.pop(("stats", "gauge"))
         raw = svc.stats_query("t", b, {"gauge": metrics}, stacked=stacked,
                               include_median=False)
-        svc._rollups = saved
+        svc._attached["stats", "gauge"] = saved
         assert routed["gauge"].keys() == raw["gauge"].keys()
         for m in raw["gauge"]:
             assert len(routed["gauge"][m]) == len(raw["gauge"][m]), m
@@ -582,7 +580,7 @@ def test_hybrid_hist_percentile_serving(spark, tmp_path):
     hists = svc.build_histogram_rollup("gauge", win, lo_v, hi_v, n_bins) \
         .filter(F.col("slice_start") < watermark)
     svc.attach_histogram_rollup("gauge", hists, win, lo_v, hi_v, n_bins)
-    assert svc._hist_rollups["gauge"][5] == watermark
+    assert svc._attached["hist", "gauge"].watermark == watermark
 
     b = Buckets.from_step(0, 8 * win, 2 * win)  # bucket 3 fully open
     exact = svc.gauge_stats("t", "m", b, percentiles=(90, 99))
@@ -647,7 +645,6 @@ def test_hybrid_hist_fused_single_agg(spark, tmp_path):
         .write.parquet(rollup_dir)
     )
     svc.attach_rollup("gauge", rollup_dir, win)
-    svc.hybrid_min_prefix_points = 0
 
     b = Buckets.from_step(0, 8 * win, 2 * win)  # bucket 3 fully open
     exact = svc.gauge_stats("t", "m", b, percentiles=(90, 99))
@@ -680,14 +677,12 @@ def test_hybrid_hist_fused_single_agg(spark, tmp_path):
             assert abs(got[k][c] - exp[k][c]) <= 2.0 + 1e-9, (k, c)
 
 
-def test_hybrid_cost_gate_thresholds(spark, tmp_path):
-    """Both sides of ``hybrid_min_prefix_points`` are pinned: a
-    watermark-CROSSING query routes hybrid when the estimated finalized
-    prefix points (rollup density x prefix windows x metrics) reach the
-    threshold, silently falls back to ONE raw scan below it, and a
-    pure-prefix query routes regardless (the gate prices the SECOND
-    scan only).  Default threshold is 0 — always hybrid, the
-    reference's unconditional merge (MetricsServiceImpl.java:662-693)."""
+def test_hybrid_route_reads_prefix_and_tail(spark, tmp_path):
+    """Every watermark-CROSSING stats query routes hybrid — the
+    reference's unconditional compressed∪temp-table merge
+    (MetricsServiceImpl.java:662-693): it reads the rollup prefix AND
+    the raw open tail and answers like the raw path, on the single- and
+    the multi-metric route; a pure-prefix query reads no store files."""
     import math
 
     import pyspark.sql.functions as F
@@ -704,7 +699,6 @@ def test_hybrid_cost_gate_thresholds(spark, tmp_path):
     store = MetricsStore(spark, str(tmp_path / "store"), slice_ms=slice_ms)
     store.add_data_points("gauge", spark.createDataFrame(rows, GAUGE_SCHEMA))
     svc = MetricsService(spark, store)
-    assert svc.hybrid_min_prefix_points == 0  # contract: hybrid by default
 
     hi = T + 3 * win
     rollup_path = str(tmp_path / "rollup")
@@ -713,24 +707,14 @@ def test_hybrid_cost_gate_thresholds(spark, tmp_path):
     ).write.parquet(rollup_path)
     svc.attach_rollup("gauge", rollup_path, win)
 
-    # density = 4 samples/window, 3 prefix windows, 1 metric -> est = 12
     crossing = Buckets.from_step(T, T + 6 * win, 2 * win)
-    est = 12
-
-    svc.hybrid_min_prefix_points = est  # est >= threshold: routes
     routed = svc.try_routed_stats("gauge", "t", "m", crossing)
     assert routed is not None
     assert any(rollup_path in f for f in routed.inputFiles())
-
-    svc.hybrid_min_prefix_points = est + 1  # est < threshold: refuses
-    assert svc.try_routed_stats("gauge", "t", "m", crossing) is None
-    # ... and the serving entry point falls back to a raw-only plan
-    # that still answers correctly
-    fell_back = svc.gauge_stats("t", "m", crossing, include_median=False)
-    assert not any(rollup_path in f for f in fell_back.inputFiles())
+    assert any("/store/" in f for f in routed.inputFiles())
     raw = svc.gauge_stats("t", "m", crossing, include_median=False,
                           use_rollup=False)
-    got = {r["start"]: r for r in fell_back.collect()}
+    got = {r["start"]: r for r in routed.collect()}
     exp = {r["start"]: r for r in raw.collect()}
     assert set(got) == set(exp) and len(got) == 3
     for k in exp:
@@ -738,18 +722,11 @@ def test_hybrid_cost_gate_thresholds(spark, tmp_path):
         for c in ("min", "avg", "max", "sum"):
             assert math.isclose(got[k][c], exp[k][c], rel_tol=1e-9), (k, c)
 
-    # pure-prefix (no second scan to price): routes even at a huge gate
-    svc.hybrid_min_prefix_points = 10**9
     prefix_only = Buckets.from_step(T, T + 2 * win, win)
     routed = svc.try_routed_stats("gauge", "t", "m", prefix_only)
     assert routed is not None
     assert not any("/store/" in f for f in routed.inputFiles())
 
-    # the multi-metric route prices metrics x prefix windows the same
-    # way: 3 windows x density 4 x 1 metric = 12
-    svc.hybrid_min_prefix_points = est + 1
-    assert svc._rollup_routed_multi("gauge", "t", ["m"], crossing) is None
-    svc.hybrid_min_prefix_points = est
     assert svc._rollup_routed_multi("gauge", "t", ["m"], crossing) is not None
 
 
@@ -821,14 +798,14 @@ def test_stats_query_hist_percentiles_multi(spark, tmp_path):
                     else:
                         assert rb[k] == xb[k], (m, k, rb, xb)
 
-    saved_r, saved_h = svc._rollups, svc._hist_rollups
+    saved = svc._attached
     for stacked, tol in ((False, 2.0), (True, 3 * 2.0)):
         routed = svc.stats_query("t", b, {"gauge": metrics}, percentiles=(90,),
                                  stacked=stacked, percentile_impl="hist")
-        svc._rollups, svc._hist_rollups = {}, {}
+        svc._attached = {}
         raw = svc.stats_query("t", b, {"gauge": metrics}, percentiles=(90,),
                               stacked=stacked)
-        svc._rollups, svc._hist_rollups = saved_r, saved_h
+        svc._attached = saved
         _compare(routed, raw, tol)
 
     # watermark-crossing: truncate both rollups to 6/8 windows; the
@@ -839,16 +816,15 @@ def test_stats_query_hist_percentiles_multi(spark, tmp_path):
     svc.attach_rollup("gauge", truncated, win)
     hists_t = spark.read.parquet(hist_dir).filter(F.col("slice_start") < cut)
     svc.attach_histogram_rollup("gauge", hists_t, win, lo_v, hi_v, n_bins)
-    svc.hybrid_min_prefix_points = 0
-    saved_r, saved_h = svc._rollups, svc._hist_rollups
+    saved = svc._attached
     probe = svc._hist_routed_multi("gauge", "t", metrics, b, (90.0,), True)
     assert probe is not None
     assert any("points" in f for f in probe.inputFiles())
     routed = svc.stats_query("t", b, {"gauge": metrics}, percentiles=(90,),
                              percentile_impl="hist")
-    svc._rollups, svc._hist_rollups = {}, {}
+    svc._attached = {}
     raw = svc.stats_query("t", b, {"gauge": metrics}, percentiles=(90,))
-    svc._rollups, svc._hist_rollups = saved_r, saved_h
+    svc._attached = saved
     _compare(routed, raw, 2.0)
 
 
@@ -895,11 +871,11 @@ def test_stacked_hist_route_grid_fills_empty_range(spark, tmp_path):
     routed = svc.stats_query("t", b, {"gauge": ["ghost1", "ghost2"]},
                              percentiles=(90,), stacked=True,
                              percentile_impl="hist")
-    saved_r, saved_h = svc._rollups, svc._hist_rollups
-    svc._rollups, svc._hist_rollups = {}, {}
+    saved = svc._attached
+    svc._attached = {}
     exact = svc.stats_query("t", b, {"gauge": ["ghost1", "ghost2"]},
                             percentiles=(90,), stacked=True)
-    svc._rollups, svc._hist_rollups = saved_r, saved_h
+    svc._attached = saved
 
     rbuckets = routed["gauge"]["*stacked*"]
     xbuckets = exact["gauge"]["*stacked*"]

@@ -480,7 +480,7 @@ def test_hybrid_serving_against_live_rollup_sink(spark, tmp_path):
         assert rolled() >= 1, "sink never finalized a window"
 
         svc.attach_rollup("gauge", rollup_dir, win_ms)
-        hi1 = svc._rollups["gauge"][2]
+        hi1 = svc._attached["stats", "gauge"].watermark
         assert hi1 is not None and hi1 < (base + 240) * 1000
 
         b = Buckets.from_step(base * 1000, (base + 240) * 1000, win_ms)

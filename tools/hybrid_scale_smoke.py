@@ -121,12 +121,11 @@ def main() -> None:
         t = time.time()
         svc.stats_query("t", bks, {"gauge": metrics}, include_median=False)
         out["hybrid_100m_sec"] = round(time.time() - t, 2)
-        saved = svc._rollups
-        svc._rollups = {}
+        saved = svc._attached.pop(("stats", "gauge"))
         t = time.time()
         svc.stats_query("t", bks, {"gauge": metrics}, include_median=False)
         out["raw_100m_sec"] = round(time.time() - t, 2)
-        svc._rollups = saved
+        svc._attached["stats", "gauge"] = saved
 
         # correctness spot-check at this volume
         import math

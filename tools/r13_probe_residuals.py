@@ -135,7 +135,6 @@ def main() -> None:
             F.unix_millis(F.col("window_end")) <= cut
         )
         svc.attach_rollup("gauge", truncated, rollup_win)
-        svc.hybrid_min_prefix_points = 0
         hybrid_bks = Buckets.from_step(rlo, rlo + 14 * step, step)
         probe = svc._hist_fused_stats(
             "bench", metrics[0], hybrid_bks, (90.0, 95.0, 99.0), True
