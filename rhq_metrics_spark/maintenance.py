@@ -518,7 +518,7 @@ class MaintenanceRunner:
         slices' partials from the freshly-compacted COLD data (pruned
         scan bounded to those slices) and write them with PER-SLICE
         DYNAMIC PARTITION OVERWRITE — a slice that re-compacts after
-        late-arriving points (store._compact_manifest merges hot into
+        late-arriving points (store.compact merges hot into
         existing cold and returns the slice again) REPLACES its previous
         partial rows instead of double-appending, which would silently
         double every "exact" rollup-served result.  Then attach on first

@@ -508,11 +508,15 @@ class MetricsService:
 
     # -- attached rollups: one registry, one attach, one route gate ------------
 
-    def _read_partials(self, family: str, src) -> DataFrame:
-        """``src`` (DataFrame or parquet path) as the family's partials
-        frame: the slice-keyed families read ``slice_start`` as epoch-ms
-        long; the stats rollup's frame is used exactly as given."""
-        df = self.spark.read.parquet(src) if isinstance(src, str) else src
+    def _read_partials(self, family: str, src, schema=None) -> DataFrame:
+        """``src`` (DataFrame or parquet path, read with ``schema`` when
+        given) as the family's partials frame: the slice-keyed families
+        read ``slice_start`` as epoch-ms long; the stats rollup's frame
+        is used exactly as given."""
+        df = src
+        if isinstance(src, str):
+            reader = self.spark.read if schema is None else self.spark.read.schema(schema)
+            df = reader.parquet(src)
         if family == "stats":
             return df
         return df.withColumn("slice_start", F.col("slice_start").cast("long"))
@@ -550,14 +554,15 @@ class MetricsService:
         A path-attached frame is RE-RESOLVED here: a parquet DataFrame
         caches its file listing at creation, so files the sink appended
         after attach are invisible to the old frame — refresh drops the
-        cached listing and rebuilds."""
+        cached listing and rebuilds it with the replaced frame's schema
+        (no schema-inference job)."""
         a = self._attached.get((family, mt))
         if a is None:
             return None
         df = a.df
         if a.path is not None:
             self.spark.catalog.refreshByPath(a.path)
-            df = self._read_partials(family, a.path)
+            df = self._read_partials(family, a.path, a.df.schema)
         wm = self._watermark(family, df, a.grid_ms)
         self._attached[(family, mt)] = a._replace(df=df, watermark=wm)
         return wm

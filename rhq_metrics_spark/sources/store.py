@@ -52,16 +52,21 @@ Scale design:
 - reads union hot+cold and apply **last-write-wins per (tenant, metric,
   ts)** — the CQL-upsert semantics (DataAccessImpl.java:215-221) — via one
   ``row_number`` window (S2/S3 merge+dedup collapses into this).
-- publish layer, two protocols (``commit_protocol=``): ``rename`` —
-  maintenance serializes on a ``flock`` store lock and publishes slice
-  rewrites with two atomic renames (old → trash, staging → live);
-  single-host.  ``manifest`` — immutable segment/version dirs + a
-  versioned JSON manifest committed by O_EXCL CAS
-  (sources/manifest.py): multiple independent hosts may ingest and run
-  maintenance concurrently, readers resolve one snapshot per query, and
-  the commit primitive maps to conditional PUT on object storage (the
-  Iceberg/Delta model, minimally).  Query and LWW semantics identical
-  under both.
+- publish layer, two protocols (``commit_protocol=``).  The protocol
+  decides three things: how maintainers serialize, how live segments
+  and slices are listed, and how a rewritten slice is published.
+  ``rename`` — a ``flock`` store lock; the directory tree is the live
+  state; a rewrite publishes with two atomic renames (old → trash,
+  staging → live); single-host.  ``manifest`` — a versioned JSON
+  manifest committed by O_EXCL CAS (sources/manifest.py) names the live
+  immutable segment/version dirs: multiple independent hosts may ingest
+  and run maintenance concurrently, readers resolve one snapshot per
+  query, and the commit primitive maps to conditional PUT on object
+  storage (the Iceberg/Delta model, minimally).  Everything else is
+  written once: the last-write-wins filter (``_lww``), the cold-layout
+  writer (``_write_cold``) and each maintenance op's body (compaction,
+  retention, row retention, tenant/metric delete, side-table saves).
+  Query and LWW semantics are identical under both.
 - compaction (B2 analogue, TempDataCompressor.java:40-98) rewrites closed
   slices: dedup → sort by (metric, ts) → cold, then drops the hot slice.
   Queries never see Gorilla blocks; they see sorted, ZSTD-Parquet row
@@ -98,6 +103,11 @@ from rhq_metrics_spark.model import (
 from rhq_metrics_spark.sources.manifest import ManifestLog, new_id
 
 _LAYERS = ("hot", "cold")
+#: the columns a stored point row carries, in file order
+_STORED = (
+    "tenant_id", "metric", "ts", "value", "tags",
+    "ingest_seq", "date_slice", "tenant_bucket",
+)
 SEG_SIDECAR = "_slices.json"
 
 # -- pure-Python XXH64 (public algorithm; github.com/Cyan4973/xxHash spec) --
@@ -174,9 +184,13 @@ class MetricsStore:
         tenant_buckets: int = 16,
         commit_protocol: str = "rename",
     ):
-        """``commit_protocol``:
+        """``commit_protocol`` decides how maintainers serialize, how
+        live segments and slices are listed and how a rewritten slice is
+        published; the maintenance ops, the cold layout and the query
+        and LWW semantics are shared:
 
-        - ``'rename'`` (default): flock-serialized maintenance + atomic
+        - ``'rename'`` (default): flock-serialized maintenance; the
+          directory tree is the live state; rewrites publish by atomic
           directory renames.  Single-host (or single-maintainer) stores
           on POSIX filesystems.
         - ``'manifest'``: versioned-manifest snapshots + O_EXCL CAS
@@ -744,17 +758,23 @@ class MetricsStore:
             clean = cold.filter(~F.col("date_slice").isin(overlap))
         elif cold is not None:
             clean = cold
-        # seq ties (same-microsecond writers, duplicate keys in one batch)
-        # break by larger value — Cassandra's deterministic cell tie-break
+        df = self._lww(df)
+        return df.unionByName(clean) if clean is not None else df
+
+    @staticmethod
+    def _lww(df: DataFrame) -> DataFrame:
+        """The one last-write-wins filter: per (tenant, metric, ts) keep
+        the row with the highest ``_layer_seq``; seq ties (same-microsecond
+        writers, duplicate keys in one batch) break by larger value —
+        Cassandra's deterministic cell tie-break."""
         w = Window.partitionBy("tenant_id", "metric", "ts").orderBy(
             F.col("_layer_seq").desc(), F.col("value").desc_nulls_last()
         )
-        df = (
+        return (
             df.withColumn("_rn", F.row_number().over(w))
             .filter(F.col("_rn") == 1)
             .drop("_rn")
         )
-        return df.unionByName(clean) if clean is not None else df
 
     def state_token(self, metric_type: str):
         """Cheap, hashable token that changes whenever a read of
@@ -853,14 +873,21 @@ class MetricsStore:
             h -= 1 << 64
         return h % self.tenant_buckets
 
-    # -- maintenance serialization --------------------------------------------
+    # -- maintenance serialization and publish --------------------------------
 
     @contextlib.contextmanager
-    def _maintenance_lock(self):
-        """Cross-process mutex for maintenance ops (compaction, retention,
-        deletes): two maintainers must not interleave slice rewrites.
-        ``flock`` on local/NFS filesystems; on object storage replace the
-        whole publish layer with a table format (module docstring)."""
+    def _mutating(self, op: str):
+        """Guard of every maintenance op (compaction, retention, deletes):
+        refused inside :meth:`as_of`, serialized against other
+        maintainers.  Rename mode takes a cross-process ``flock`` — two
+        maintainers must not interleave slice rewrites (local/NFS
+        filesystems).  Manifest mode takes nothing: the CAS commit is the
+        (multi-host) serialization — racing maintainers each win some
+        slices, a loser's output is unreferenced and vacuumed."""
+        self._assert_not_pinned(op)
+        if self.manifest is not None:
+            yield
+            return
         self.base.mkdir(parents=True, exist_ok=True)
         fd = os.open(str(self.base / "_maintenance.lock"), os.O_CREAT | os.O_RDWR)
         try:
@@ -870,16 +897,18 @@ class MetricsStore:
             fcntl.flock(fd, fcntl.LOCK_UN)
             os.close(fd)
 
-    def _swap_in(self, src: Path, dst: Path) -> None:
+    def _swap_in(self, src: Path | None, dst: Path) -> None:
         """Publish a rewritten partition with two atomic renames: live →
-        trash, staging → live.  Readers racing the swap see either the
-        old or the new data (or, in the instant between renames, neither)
-        — never a half-written mix; the trash dir is dropped last."""
+        trash, staging → live (``src`` None: only retire ``dst``).
+        Readers racing the swap see either the old or the new data (or,
+        in the instant between renames, neither) — never a half-written
+        mix; the trash dir is dropped last."""
         trash = dst.parent / f"_trash-{uuid.uuid4().hex}"
         if dst.exists():
             os.rename(dst, trash)
-        dst.parent.mkdir(parents=True, exist_ok=True)
-        os.rename(src, dst)
+        if src is not None:
+            dst.parent.mkdir(parents=True, exist_ok=True)
+            os.rename(src, dst)
         shutil.rmtree(trash, ignore_errors=True)
         # Bump every ancestor's mtime up to the store base: a swap two
         # levels down (date_slice=X/tenant_bucket=Y) doesn't touch the
@@ -895,6 +924,95 @@ class MetricsStore:
             if p.resolve() == base or p.parent == p:
                 break
             p = p.parent
+
+    def _retire(self, path: Path) -> None:
+        """Take a hot segment or cold partition out of the live layout —
+        the trash rename of :meth:`_swap_in`, with its mtime bump, so no
+        cached cold plan keeps listing the retired files."""
+        self._swap_in(None, path)
+
+    def _write_cold(self, df: DataFrame, staging: Path) -> dict[int, Path]:
+        """The one cold-layout writer (compaction and every cold rewrite):
+        one task per (slice, bucket), rows sorted by (metric, ts) so
+        parquet min/max prunes metric predicates within a file, ZSTD, v2
+        data pages (DELTA_BINARY_PACKED on the sorted ts column, the
+        Gorilla delta-of-delta axis: ~10% smaller cold files).  The
+        partition columns lead the sort: the writer needs rows grouped
+        by them, and a sort it had to add itself would discard
+        (metric, ts).  Rename mode stages ``date_slice=/tenant_bucket=``
+        Hive dirs; manifest mode partitions by ``_ds``/``_tb`` copies
+        (the files keep the real columns — each slice dir becomes an
+        ``s-<slice>/v-<id>`` version).  Returns each written slice's
+        staged dir."""
+        df = df.select(*_STORED)
+        parts = ("date_slice", "tenant_bucket")
+        if self.manifest is not None:
+            df = df.withColumn("_ds", F.col("date_slice")).withColumn(
+                "_tb", F.col("tenant_bucket")
+            )
+            parts = ("_ds", "_tb")
+        (
+            df.repartition(*parts)
+            .sortWithinPartitions(*parts, "metric", "ts")
+            .write.mode("overwrite")
+            .option("compression", "zstd")
+            .option("parquet.writer.version", "v2")
+            .partitionBy(*parts)
+            .parquet(str(staging))
+        )
+        return {
+            int(p.name.split("=", 1)[1]): p for p in staging.glob(f"{parts[0]}=*")
+        }
+
+    def _stage_versions(
+        self, metric_type: str, staged: dict[int, Path]
+    ) -> dict[int, str]:
+        """Manifest mode: move each staged cold slice to a new immutable
+        ``s-<slice>/v-<id>`` dir, unreferenced until a CAS commit names
+        it.  Returns slice → version."""
+        root = self._points_path(metric_type, "cold")
+        vmap: dict[int, str] = {}
+        for s, src in staged.items():
+            vmap[s] = new_id("v")
+            dst = root / f"s-{s}" / vmap[s]
+            dst.parent.mkdir(parents=True, exist_ok=True)
+            os.rename(src, dst)
+        return vmap
+
+    def _replace_segments(
+        self, metric_type: str, retire: list[Path], kept: DataFrame | None
+    ) -> None:
+        """Rename-mode hot publish: ``kept`` (rows carried over with their
+        original ``ingest_seq``, so LWW ranks are unchanged) lands as ONE
+        new segment, published BEFORE the ``retire`` segments go — a
+        racing reader sees the rows in old+new (identical (seq, value)
+        duplicates that the LWW window collapses), never a gap."""
+        if kept is not None:
+            staging = self.base / "_staging" / new_id("rewrite")
+            pairs = self._write_segment_staging(kept.select(*_STORED), staging)
+            self._publish_segment(
+                staging, self._points_path(metric_type, "hot"), pairs
+            )
+        for seg in retire:
+            self._retire(seg)
+
+    def _drop_hot_slices(
+        self, metric_type: str, metas: dict[Path, set[int]], drop: set[int]
+    ) -> None:
+        """Rename mode: take the ``drop`` slices out of the hot layer by
+        retiring every segment of ``metas`` that holds one.  Straddlers
+        (segments that also hold other slices) are first rewritten to
+        their surviving rows (:meth:`_replace_segments`).  Segment
+        granular: no Spark job unless a straddler exists."""
+        straddlers = [seg for seg, sl in metas.items() if sl - drop and sl & drop]
+        kept = None
+        if straddlers:
+            kept = self._read_segment_paths(metric_type, straddlers).filter(
+                ~F.col("date_slice").isin(sorted(drop))
+            )
+        self._replace_segments(
+            metric_type, [seg for seg, sl in metas.items() if sl & drop], kept
+        )
 
     # -- lifecycle jobs (B2/B6/B7) -------------------------------------------
 
@@ -934,259 +1052,119 @@ class MetricsStore:
         All closed slices compact in ONE Spark job (the date_slice
         partition column splits the output): a backfill with hundreds of
         slices costs one shuffle, not one job per slice."""
-        self._assert_not_pinned("compact")
-        if self.manifest is not None:
-            # no flock: the manifest CAS is the (multi-host) serialization;
-            # racing compactors each win some slices, losers' output is
-            # unreferenced and vacuumed
-            return self._compact_manifest(metric_type, closed_before_ms)
-        with self._maintenance_lock():
-            return self._compact_locked(metric_type, closed_before_ms)
+        with self._mutating("compact"):
+            snap = None
+            if self.manifest is not None:
+                _, snap = self.manifest.current()
+                hot_entry = snap.get("points", {}).get(metric_type, {}).get("hot", {})
+                cold_entry = snap.get("points", {}).get(metric_type, {}).get("cold", {})
+                closed = sorted(
+                    int(s) for s in hot_entry
+                    if int(s) + self.slice_ms <= closed_before_ms
+                )
+            else:
+                # capture the segment list ONCE: a segment published after
+                # this point is untouched (read from a stable path list,
+                # retired from the same list) — concurrent ingest never
+                # loses data
+                segs = self._hot_segments(metric_type)
+                metas = {seg: set(self._seg_meta(seg)["slices"]) for seg in segs}
+                closed = sorted({
+                    s for sl in metas.values() for s in sl
+                    if s + self.slice_ms <= closed_before_ms
+                })
+            if not closed:
+                return []
+            hot = (
+                self._read_segment_paths(metric_type, segs) if snap is None
+                else self._read_layer(metric_type, "hot", snap=snap, slices=closed)
+            )
+            cold = self._read_layer(metric_type, "cold", snap=snap, slices=closed)
+            merged = hot if cold is None else hot.unionByName(cold)
+            staging = self.base / "_staging" / new_id("compact")
+            staged = self._write_cold(
+                self._lww(merged.filter(F.col("date_slice").isin(closed)))
+                .withColumn("ingest_seq", F.lit(0).cast("long")),
+                staging,
+            )
+            if snap is None:
+                cold_root = self._points_path(metric_type, "cold")
+                for src in staged.values():
+                    self._swap_in(src, cold_root / src.name)
+                shutil.rmtree(staging, ignore_errors=True)
+                self._drop_hot_slices(metric_type, metas, set(closed))
+                return sorted(staged)
+            vmap = self._stage_versions(metric_type, staged)
+            shutil.rmtree(staging, ignore_errors=True)
 
-    def _compact_manifest(self, metric_type: str, closed_before_ms: int) -> list[int]:
-        log = self.manifest
-        _, snap = log.current()
-        hot_entry = snap.get("points", {}).get(metric_type, {}).get("hot", {})
-        cold_entry = snap.get("points", {}).get(metric_type, {}).get("cold", {})
-        closed = [
-            int(s) for s in hot_entry if int(s) + self.slice_ms <= closed_before_ms
-        ]
-        if not closed:
-            return []
-        hot = self._read_layer(metric_type, "hot", snap=snap, slices=closed)
-        cold = self._read_layer(metric_type, "cold", snap=snap, slices=closed)
-        merged = hot if cold is None else hot.unionByName(cold)
-        w = Window.partitionBy("tenant_id", "metric", "ts").orderBy(
-            F.col("_layer_seq").desc(), F.col("value").desc_nulls_last()
-        )
-        compacted = (
-            merged.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .select(
-                "tenant_id",
-                "metric",
-                "ts",
-                "value",
-                "tags",
-                F.lit(0).cast("long").alias("ingest_seq"),
-                "date_slice",
-                "tenant_bucket",
-            )
-        )
-        staging = self.base / "_staging" / new_id("compact")
-        (
-            compacted.withColumn("_ds", F.col("date_slice"))
-            .withColumn("_tb", F.col("tenant_bucket"))
-            .repartition("_ds", "_tb")
-            .sortWithinPartitions("metric", "ts")
-            .write.mode("overwrite")
-            .option("compression", "zstd")
-            .option("parquet.writer.version", "v2")
-            .partitionBy("_ds", "_tb")
-            .parquet(str(staging))
-        )
-        cold_root = self._points_path(metric_type, "cold")
-        vmap: dict[int, str] = {}
-        for slice_start in closed:
-            src = staging / f"_ds={slice_start}"
-            if not src.exists():
-                continue
-            vdir = new_id("v")
-            dst = cold_root / f"s-{slice_start}" / vdir
-            dst.parent.mkdir(parents=True, exist_ok=True)
-            os.rename(src, dst)
-            vmap[slice_start] = vdir
-        shutil.rmtree(staging, ignore_errors=True)
+            def mutate(state: dict) -> dict | None:
+                cur_hot = ManifestLog.points_entry(state, metric_type, "hot")
+                cur_cold = ManifestLog.points_entry(state, metric_type, "cold")
+                changed = False
+                for s in list(vmap):
+                    key = str(s)
+                    if cur_cold.get(key) != cold_entry.get(key):
+                        # a racing compactor republished this slice after our
+                        # snapshot: our rewrite is stale — leave theirs
+                        vmap.pop(s)
+                        continue
+                    snap_segs = set(hot_entry.get(key, []))
+                    if not snap_segs <= set(cur_hot.get(key, [])):
+                        # a racing retention / tenant- or metric-delete /
+                        # slice rewrite REMOVED hot segments we compacted:
+                        # publishing our output would resurrect the deleted
+                        # rows into cold.  Drop the slice — the next
+                        # compaction run rebuilds it from the current state.
+                        vmap.pop(s)
+                        continue
+                    remaining = [g for g in cur_hot.get(key, []) if g not in snap_segs]
+                    if remaining:
+                        # segments ingested after our snapshot stay hot; the
+                        # next compaction merges them (their seq > cold's -1)
+                        cur_hot[key] = remaining
+                    else:
+                        cur_hot.pop(key, None)
+                    cur_cold[key] = vmap[s]
+                    changed = True
+                return state if changed else None
 
-        def mutate(state: dict) -> dict | None:
-            cur_hot = ManifestLog.points_entry(state, metric_type, "hot")
-            cur_cold = ManifestLog.points_entry(state, metric_type, "cold")
-            changed = False
-            for s in list(vmap):
-                key = str(s)
-                if cur_cold.get(key) != cold_entry.get(key):
-                    # a racing compactor republished this slice after our
-                    # snapshot: our rewrite is stale — leave theirs
-                    vmap.pop(s)
-                    continue
-                snap_segs = set(hot_entry.get(key, []))
-                if not snap_segs <= set(cur_hot.get(key, [])):
-                    # a racing retention / tenant- or metric-delete /
-                    # slice rewrite REMOVED hot segments we compacted:
-                    # publishing our output would resurrect the deleted
-                    # rows into cold.  Drop the slice — the next
-                    # compaction run rebuilds it from the current state.
-                    vmap.pop(s)
-                    continue
-                remaining = [g for g in cur_hot.get(key, []) if g not in snap_segs]
-                if remaining:
-                    # segments ingested after our snapshot stay hot; the
-                    # next compaction merges them (their seq > cold's -1)
-                    cur_hot[key] = remaining
-                else:
-                    cur_hot.pop(key, None)
-                cur_cold[key] = vmap[s]
-                changed = True
-            return state if changed else None
-
-        log.commit(mutate)
-        return sorted(vmap)
-
-    def _compact_locked(self, metric_type: str, closed_before_ms: int) -> list[int]:
-        # capture the segment list ONCE: a segment published after this
-        # point is untouched (read from a stable path list, retired from
-        # the same list) — concurrent ingest never loses data
-        segs = self._hot_segments(metric_type)
-        metas = {seg: set(self._seg_meta(seg)["slices"]) for seg in segs}
-        closed_set = {
-            s
-            for sl in metas.values()
-            for s in sl
-            if s + self.slice_ms <= closed_before_ms
-        }
-        closed = sorted(closed_set)
-        if not closed:
-            return []
-        hot = self._read_segment_paths(metric_type, segs).filter(
-            F.col("date_slice").isin(closed)
-        )
-        cold_layer = self._read_layer(metric_type, "cold")
-        merged = hot
-        if cold_layer is not None:
-            merged = hot.unionByName(
-                cold_layer.filter(F.col("date_slice").isin(closed))
-            )
-        w = Window.partitionBy("tenant_id", "metric", "ts").orderBy(
-            F.col("_layer_seq").desc(), F.col("value").desc_nulls_last()
-        )
-        compacted = (
-            merged.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .select(
-                "tenant_id",
-                "metric",
-                "ts",
-                "value",
-                "tags",
-                F.lit(0).cast("long").alias("ingest_seq"),
-                "date_slice",
-                "tenant_bucket",
-            )
-        )
-        staging = self.base / "_staging" / f"{metric_type}_compact"
-        (
-            compacted.repartition("date_slice", "tenant_bucket")
-            .sortWithinPartitions("metric", "ts")
-            .write.mode("overwrite")
-            .option("compression", "zstd")
-            # v2 data pages: DELTA_BINARY_PACKED on the sorted ts column
-            # (the Gorilla delta-of-delta axis) — ~10% smaller cold files
-            .option("parquet.writer.version", "v2")
-            .partitionBy("date_slice", "tenant_bucket")
-            .parquet(str(staging))
-        )
-        cold_root = self._points_path(metric_type, "cold")
-        cold_root.mkdir(parents=True, exist_ok=True)
-        done = []
-        for slice_start in closed:
-            src = staging / f"date_slice={slice_start}"
-            if not src.exists():
-                continue
-            self._swap_in(src, cold_root / f"date_slice={slice_start}")
-            done.append(slice_start)
-        shutil.rmtree(staging, ignore_errors=True)
-        # retire the consumed hot segments.  Straddlers (segments that
-        # also hold still-open slices) are first rewritten to their
-        # surviving rows and published as a NEW segment — publish before
-        # retire, so a racing reader sees the rows in old+new (identical
-        # (seq, value) duplicates that the LWW window collapses), never
-        # a gap.
-        straddlers = [
-            seg for seg, sl in metas.items() if sl - closed_set and sl & closed_set
-        ]
-        if straddlers:
-            rem = self._read_segment_paths(metric_type, straddlers).filter(
-                ~F.col("date_slice").isin(closed)
-            ).select(
-                "tenant_id", "metric", "ts", "value", "tags",
-                "ingest_seq", "date_slice", "tenant_bucket",
-            )
-            rem_staging = self.base / "_staging" / new_id("remainder")
-            pairs = self._write_segment_staging(rem, rem_staging)
-            self._publish_segment(
-                rem_staging, self._points_path(metric_type, "hot"), pairs
-            )
-        for seg in segs:
-            if metas[seg] & closed_set:
-                retired = seg.parent / f"_trash-{uuid.uuid4().hex}"
-                os.rename(seg, retired)
-                shutil.rmtree(retired, ignore_errors=True)
-        return done
+            self.manifest.commit(mutate)
+            return sorted(vmap)
 
     def apply_retention(self, metric_type: str, cutoff_ms: int) -> list[int]:
         """B6: drop whole slices whose every point is older than cutoff —
         a partition-level delete, no data rewrite."""
-        self._assert_not_pinned("apply_retention")
-        if self.manifest is not None:
-            dropped: list[int] = []
+        with self._mutating("apply_retention"):
+            if self.manifest is not None:
+                dropped: list[int] = []
 
-            def mutate(state: dict) -> dict | None:
-                dropped.clear()
-                for layer in _LAYERS:
-                    entry = ManifestLog.points_entry(state, metric_type, layer)
-                    for key in list(entry):
-                        if int(key) + self.slice_ms <= cutoff_ms:
-                            entry.pop(key)
-                            dropped.append(int(key))
-                return state if dropped else None
+                def mutate(state: dict) -> dict | None:
+                    dropped.clear()
+                    for layer in _LAYERS:
+                        entry = ManifestLog.points_entry(state, metric_type, layer)
+                        for key in list(entry):
+                            if int(key) + self.slice_ms <= cutoff_ms:
+                                entry.pop(key)
+                                dropped.append(int(key))
+                    return state if dropped else None
 
-            self.manifest.commit(mutate)
-            return sorted(set(dropped))
-        dropped: list[int] = []
-        with self._maintenance_lock():
-            # hot: drop wholly-expired segments; rewrite straddlers down
-            # to their surviving slices (publish-then-retire, as in
-            # compaction).  Segment-granular, no Hive dirs.
-            segs = self._hot_segments(metric_type)
-            metas = {seg: set(self._seg_meta(seg)["slices"]) for seg in segs}
+                self.manifest.commit(mutate)
+                return sorted(set(dropped))
+            metas = {
+                seg: set(self._seg_meta(seg)["slices"])
+                for seg in self._hot_segments(metric_type)
+            }
             expired = {
-                s
-                for sl in metas.values()
-                for s in sl
+                s for sl in metas.values() for s in sl
                 if s + self.slice_ms <= cutoff_ms
             }
-            dropped.extend(expired)
-            straddlers = [
-                seg for seg, sl in metas.items() if sl - expired and sl & expired
-            ]
-            if straddlers:
-                kept = self._read_segment_paths(metric_type, straddlers).filter(
-                    F.col("date_slice") + F.lit(self.slice_ms) > F.lit(cutoff_ms)
-                ).select(
-                    "tenant_id", "metric", "ts", "value", "tags",
-                    "ingest_seq", "date_slice", "tenant_bucket",
-                )
-                staging = self.base / "_staging" / new_id("retention")
-                pairs = self._write_segment_staging(kept, staging)
-                self._publish_segment(
-                    staging, self._points_path(metric_type, "hot"), pairs
-                )
-            for seg in segs:
-                if metas[seg] & expired:
-                    retired = seg.parent / f"_trash-{uuid.uuid4().hex}"
-                    os.rename(seg, retired)
-                    shutil.rmtree(retired, ignore_errors=True)
-            # cold: partition-level drop, no rewrite
+            self._drop_hot_slices(metric_type, metas, expired)
             root = self._points_path(metric_type, "cold")
-            if root.exists():
-                for p in sorted(root.glob("date_slice=*")):
-                    slice_start = int(p.name.split("=", 1)[1])
-                    if slice_start + self.slice_ms <= cutoff_ms:
-                        retired = root / f"_trash-{uuid.uuid4().hex}"
-                        os.rename(p, retired)
-                        shutil.rmtree(retired, ignore_errors=True)
-                        dropped.append(slice_start)
-        return sorted(set(dropped))
+            for s in self._layer_slices(metric_type, "cold"):
+                if s + self.slice_ms <= cutoff_ms:
+                    self._retire(root / f"date_slice={s}")
+                    expired.add(s)
+            return sorted(expired)
 
     def apply_row_retention(
         self,
@@ -1200,8 +1178,7 @@ class MetricsStore:
         the slices that can contain them.  Whole-slice drops should be
         done first via :meth:`apply_retention` (cheaper).  Returns the
         number of rewritten slice partitions."""
-        self._assert_not_pinned("apply_row_retention")
-        if self.manifest is not None:
+        with self._mutating("apply_row_retention"):
             max_cutoff_row = cutoffs.agg(F.max("cutoff_ms")).collect()[0][0]
             max_cutoff = max(default_cutoff_ms, max_cutoff_row or 0)
 
@@ -1215,16 +1192,65 @@ class MetricsStore:
 
             rewritten = 0
             for layer in _LAYERS:
+                affected = [
+                    s for s in self._layer_slices(metric_type, layer) if s < max_cutoff
+                ]
                 rewritten += len(
-                    self._rewrite_slices_manifest(
-                        metric_type, layer, (0, max_cutoff), keep
-                    )
+                    self._rewrite_slices(metric_type, layer, affected, keep)
                 )
             return rewritten
-        with self._maintenance_lock():
-            return self._apply_row_retention_locked(
-                metric_type, cutoffs, default_cutoff_ms
-            )
+
+    def _rewrite_slices(
+        self, metric_type: str, layer: str, affected: list[int], keep_fn,
+        bucket: int | None = None,
+    ) -> list[int]:
+        """Rewrite the ``affected`` slices of ``layer`` down to
+        ``keep_fn(df)``'s rows (original ``ingest_seq`` preserved so LWW
+        ranks are unchanged); returns the slices rewritten.  Manifest
+        mode: :meth:`_rewrite_slices_manifest`.  Rename mode, under the
+        maintenance lock — hot: every segment holding an affected slice
+        (and, with ``bucket``, that bucket) is rewritten whole as one new
+        segment (:meth:`_replace_segments`); cold: the affected slices
+        (only their ``bucket`` dir, if given) go through
+        :meth:`_write_cold`, then each partition is swapped in, or
+        retired when none of its rows survive."""
+        if not affected:
+            return []
+        if self.manifest is not None:
+            return self._rewrite_slices_manifest(metric_type, layer, affected, keep_fn)
+        want = set(affected)
+        if layer == "hot":
+            touched = []
+            for seg in self._hot_segments(metric_type):
+                meta = self._seg_meta(seg)
+                if want & set(meta["slices"]) and (
+                    bucket is None or bucket in meta.get("buckets", [bucket])
+                ):
+                    touched.append(seg)
+            if touched:
+                self._replace_segments(
+                    metric_type, touched,
+                    keep_fn(self._read_segment_paths(metric_type, touched)),
+                )
+            return sorted(want)
+        df = self._read_layer(metric_type, "cold").filter(
+            F.col("date_slice").isin(sorted(want))
+        )
+        if bucket is not None:
+            df = df.filter(F.col("tenant_bucket") == bucket)
+        staging = self.base / "_staging" / new_id("rewrite")
+        self._write_cold(keep_fn(df), staging)
+        root = self._points_path(metric_type, "cold")
+        for s in sorted(want):
+            part = f"date_slice={s}"
+            if bucket is not None:
+                part += f"/tenant_bucket={bucket}"
+            if (staging / part).exists():
+                self._swap_in(staging / part, root / part)
+            elif (root / part).exists():  # no row of the partition survived
+                self._retire(root / part)
+        shutil.rmtree(staging, ignore_errors=True)
+        return sorted(want)
 
     def _rewrite_slices_manifest(
         self, metric_type: str, layer: str, slices, keep_fn
@@ -1243,10 +1269,7 @@ class MetricsStore:
         if not affected:
             return []
         df = self._read_layer(metric_type, layer, snap=snap, slices=affected)
-        kept = keep_fn(df).select(
-            "tenant_id", "metric", "ts", "value", "tags",
-            "ingest_seq", "date_slice", "tenant_bucket",
-        )
+        kept = keep_fn(df).select(*_STORED)
         root = self._points_path(metric_type, layer)
         staging = self.base / "_staging" / new_id("rewrite")
         seg = None
@@ -1257,25 +1280,7 @@ class MetricsStore:
             out_slices = {p[0] for p in pairs}
             seg = self._publish_segment(staging, root, pairs)
         else:
-            (
-                kept.withColumn("_ds", F.col("date_slice"))
-                .withColumn("_tb", F.col("tenant_bucket"))
-                .repartition("_ds", "_tb")
-                .sortWithinPartitions("metric", "ts")
-                .write.mode("overwrite")
-                .option("compression", "zstd")
-                .partitionBy("_ds", "_tb")
-                .parquet(str(staging))
-            )
-            out_slices = {
-                int(p.name.split("=", 1)[1]) for p in staging.glob("_ds=*")
-            }
-            for s in sorted(out_slices):
-                vdir = new_id("v")
-                dst = root / f"s-{s}" / vdir
-                dst.parent.mkdir(parents=True, exist_ok=True)
-                os.rename(staging / f"_ds={s}", dst)
-                vmap[s] = vdir
+            vmap = self._stage_versions(metric_type, self._write_cold(kept, staging))
             shutil.rmtree(staging, ignore_errors=True)
 
         swapped: list[int] = []
@@ -1314,189 +1319,46 @@ class MetricsStore:
         log.commit(mutate)
         return sorted(swapped)
 
-    def _apply_row_retention_locked(
-        self,
-        metric_type: str,
-        cutoffs: DataFrame,
-        default_cutoff_ms: int,
+    def _delete_rows(
+        self, metric_type: str, tenant_id: str, target, layers
     ) -> int:
-        max_cutoff_row = cutoffs.agg(F.max("cutoff_ms")).collect()[0][0]
-        max_cutoff = max(default_cutoff_ms, max_cutoff_row or 0)
-
-        def keep(df: DataFrame) -> DataFrame:
-            return (
-                df.join(F.broadcast(cutoffs), ["tenant_id", "metric"], "left")
-                .filter(
-                    F.col("ts")
-                    >= F.coalesce(F.col("cutoff_ms"), F.lit(default_cutoff_ms))
-                )
-                .select(
-                    "tenant_id", "metric", "ts", "value", "tags",
-                    "ingest_seq", "date_slice", "tenant_bucket",
-                )
-            )
-
+        """Remove the rows matching ``target`` (a predicate on rows of
+        ``tenant_id``) from ``layers``: per layer, one pruned scan lists
+        the slices that actually hold such rows, and only those are
+        rewritten (rename mode: cold only in the tenant's bucket dirs).
+        Returns the rewritten slice count."""
+        bucket = self._tenant_bucket_of(tenant_id)
+        target = (F.col("tenant_bucket") == bucket) & target
         rewritten = 0
-        # hot: rewrite only the segments that hold affected slices — all
-        # of them in ONE job, published as one new segment
-        segs = self._hot_segments(metric_type)
-        metas = {seg: set(self._seg_meta(seg)["slices"]) for seg in segs}
-        hot_affected = {
-            s for sl in metas.values() for s in sl if s < max_cutoff
-        }
-        touched = [seg for seg, sl in metas.items() if sl & hot_affected]
-        if touched:
-            kept_hot = keep(self._read_segment_paths(metric_type, touched))
-            staging = self.base / "_staging" / new_id("rowret")
-            pairs = self._write_segment_staging(kept_hot, staging)
-            self._publish_segment(
-                staging, self._points_path(metric_type, "hot"), pairs
-            )
-            for seg in touched:
-                retired = seg.parent / f"_trash-{uuid.uuid4().hex}"
-                os.rename(seg, retired)
-                shutil.rmtree(retired, ignore_errors=True)
-            rewritten += len(hot_affected)
-        # cold: per-slice partition swap
-        root = self._points_path(metric_type, "cold")
-        if root.exists():
+        for layer in layers:
+            df = self._read_layer(metric_type, layer)
+            if df is None:
+                continue
             affected = [
-                int(p.name.split("=", 1)[1])
-                for p in root.glob("date_slice=*")
-                if int(p.name.split("=", 1)[1]) < max_cutoff
+                r["date_slice"]
+                for r in df.filter(target).select("date_slice").distinct().collect()
             ]
-            if affected:
-                df = self._read_layer(metric_type, "cold").filter(
-                    F.col("date_slice").isin(affected)
-                )
-                kept = keep(df)
-                staging = self.base / "_staging" / f"ret_{metric_type}_cold"
-                kept.write.mode("overwrite").option(
-                    "compression", "zstd"
-                ).partitionBy("date_slice", "tenant_bucket").parquet(str(staging))
-                for slice_start in affected:
-                    dst = root / f"date_slice={slice_start}"
-                    src = staging / f"date_slice={slice_start}"
-                    if src.exists():
-                        self._swap_in(src, dst)
-                    elif dst.exists():  # every row in the slice expired
-                        retired = root / f"_trash-{uuid.uuid4().hex}"
-                        os.rename(dst, retired)
-                        shutil.rmtree(retired, ignore_errors=True)
-                    rewritten += 1
-                shutil.rmtree(staging, ignore_errors=True)
+            rewritten += len(self._rewrite_slices(
+                metric_type, layer, affected, lambda d: d.filter(~target), bucket
+            ))
         return rewritten
 
     def delete_tenant(self, tenant_id: str) -> None:
-        """B7: cascading delete — rewrite affected tenant_bucket partitions
-        without the tenant's rows, and scrub the definition tables
-        *including* the tenant row itself (DeleteTenant.java:53,103-104 —
-        a re-created tenant must not inherit stale retention policies)."""
-        self._assert_not_pinned("delete_tenant")
-        if self.manifest is not None:
+        """B7: cascading delete — rewrite the slices holding the tenant's
+        rows without them, and scrub the definition tables *including*
+        the tenant row itself (DeleteTenant.java:53,103-104 — a
+        re-created tenant must not inherit stale retention policies)."""
+        with self._mutating("delete_tenant"):
             for metric_type in MetricType.USER_WRITABLE:
-                for layer in _LAYERS:
-                    df = self._read_layer(metric_type, layer)
-                    if df is None:
-                        continue
-                    # pruned scan → only slices that hold the tenant's rows
-                    affected = [
-                        r["date_slice"]
-                        for r in df.filter(F.col("tenant_id") == tenant_id)
-                        .select("date_slice")
-                        .distinct()
-                        .collect()
-                    ]
-                    if not affected:
-                        continue
-                    self._rewrite_slices_manifest(
-                        metric_type,
-                        layer,
-                        affected,
-                        lambda d: d.filter(F.col("tenant_id") != tenant_id),
-                    )
+                self._delete_rows(
+                    metric_type, tenant_id, F.col("tenant_id") == tenant_id, _LAYERS
+                )
             idx = self.metrics_idx()
             if idx is not None:
                 self.save_metrics_idx(idx.filter(F.col("tenant_id") != tenant_id))
             tenants = self.tenants()
             if tenants is not None:
                 self.save_tenants(tenants.filter(F.col("id") != tenant_id))
-            return
-        with self._maintenance_lock():
-            self._delete_tenant_locked(tenant_id)
-
-    def _rewrite_hot_segments_locked(
-        self, metric_type: str, touched: list[Path], keep_fn
-    ) -> None:
-        """Rewrite the given hot segments through ``keep_fn`` as ONE new
-        segment (original ``ingest_seq`` preserved so LWW ranks are
-        unchanged), publish it, then retire the old segments."""
-        if not touched:
-            return
-        kept = keep_fn(self._read_segment_paths(metric_type, touched)).select(
-            "tenant_id", "metric", "ts", "value", "tags",
-            "ingest_seq", "date_slice", "tenant_bucket",
-        )
-        staging = self.base / "_staging" / new_id("rewrite")
-        pairs = self._write_segment_staging(kept, staging)
-        self._publish_segment(
-            staging, self._points_path(metric_type, "hot"), pairs
-        )
-        for seg in touched:
-            retired = seg.parent / f"_trash-{uuid.uuid4().hex}"
-            os.rename(seg, retired)
-            shutil.rmtree(retired, ignore_errors=True)
-
-    def _delete_tenant_locked(self, tenant_id: str) -> None:
-        bucket = self._tenant_bucket_of(tenant_id)
-        for metric_type in MetricType.USER_WRITABLE:
-            # hot: rewrite only the segments whose bucket set can hold
-            # the tenant (sidecar-pruned)
-            touched = [
-                seg
-                for seg in self._hot_segments(metric_type)
-                if bucket in self._seg_meta(seg).get("buckets", [bucket])
-            ]
-            self._rewrite_hot_segments_locked(
-                metric_type,
-                touched,
-                lambda d: d.filter(F.col("tenant_id") != tenant_id),
-            )
-            # cold: bucket-dir-granular rewrite
-            root = self._points_path(metric_type, "cold")
-            if not root.exists():
-                continue
-            matches = list(root.glob(f"date_slice=*/tenant_bucket={bucket}"))
-            if not matches:
-                continue
-            df = self._read_layer(metric_type, "cold")
-            kept = df.filter(
-                (F.col("tenant_bucket") == bucket)
-                & (F.col("tenant_id") != tenant_id)
-            ).select(
-                "tenant_id", "metric", "ts", "value", "tags",
-                "ingest_seq", "date_slice", "tenant_bucket",
-            )
-            staging = self.base / "_staging" / f"del_{metric_type}_cold"
-            kept.write.mode("overwrite").partitionBy(
-                "date_slice", "tenant_bucket"
-            ).parquet(str(staging))
-            for m in matches:
-                shutil.rmtree(m)
-            for sdir in Path(staging).glob(
-                f"date_slice=*/tenant_bucket={bucket}"
-            ):
-                dst = root / sdir.parent.name / sdir.name
-                dst.parent.mkdir(parents=True, exist_ok=True)
-                shutil.move(str(sdir), str(dst))
-            shutil.rmtree(staging, ignore_errors=True)
-        # definitions
-        idx = self.metrics_idx()
-        if idx is not None:
-            self.save_metrics_idx(idx.filter(F.col("tenant_id") != tenant_id))
-        tenants = self.tenants()
-        if tenants is not None:
-            self.save_tenants(tenants.filter(F.col("id") != tenant_id))
 
     def delete_metric(
         self,
@@ -1510,110 +1372,13 @@ class MetricsStore:
         compressed data in place ("compressed data is not deleted due to
         using TWCS", :1087) and lets retention expire it; ``include_cold``
         opts into a full purge.  Returns rewritten partition count."""
-        self._assert_not_pinned("delete_metric")
-        if self.manifest is not None:
-            target_rows = (
-                (F.col("tenant_id") == tenant_id) & (F.col("metric") == metric)
+        with self._mutating("delete_metric"):
+            return self._delete_rows(
+                metric_type,
+                tenant_id,
+                (F.col("tenant_id") == tenant_id) & (F.col("metric") == metric),
+                _LAYERS if include_cold else ("hot",),
             )
-            rewritten = 0
-            for layer in _LAYERS if include_cold else ("hot",):
-                # one pruned scan lists the slices that actually hold the
-                # metric — only those get rewritten
-                df = self._read_layer(metric_type, layer)
-                if df is None:
-                    continue
-                affected = [
-                    r["date_slice"]
-                    for r in df.filter(target_rows)
-                    .select("date_slice")
-                    .distinct()
-                    .collect()
-                ]
-                if not affected:
-                    continue
-                rewritten += len(
-                    self._rewrite_slices_manifest(
-                        metric_type, layer, affected,
-                        lambda d: d.filter(~target_rows),
-                    )
-                )
-            return rewritten
-        with self._maintenance_lock():
-            return self._delete_metric_locked(
-                metric_type, tenant_id, metric, include_cold
-            )
-
-    def _delete_metric_locked(
-        self, metric_type: str, tenant_id: str, metric: str, include_cold: bool
-    ) -> int:
-        bucket = self._tenant_bucket_of(tenant_id)
-        target = (
-            (F.col("tenant_bucket") == bucket)
-            & (F.col("tenant_id") == tenant_id)
-            & (F.col("metric") == metric)
-        )
-        rewritten = 0
-        # hot: segments whose bucket set can hold the tenant, narrowed by
-        # one pruned scan to those that actually hold the metric's rows
-        candidates = [
-            seg
-            for seg in self._hot_segments(metric_type)
-            if bucket in self._seg_meta(seg).get("buckets", [bucket])
-        ]
-        if candidates:
-            df = self._read_segment_paths(metric_type, candidates)
-            affected = [
-                r["date_slice"]
-                for r in df.filter(target).select("date_slice").distinct().collect()
-            ]
-            if affected:
-                touched = [
-                    seg
-                    for seg in candidates
-                    if set(self._seg_meta(seg)["slices"]) & set(affected)
-                ]
-                self._rewrite_hot_segments_locked(
-                    metric_type, touched, lambda d: d.filter(~target)
-                )
-                rewritten += len(affected)
-        if not include_cold:
-            return rewritten
-        root = self._points_path(metric_type, "cold")
-        if not root.exists():
-            return rewritten
-        df = self._read_layer(metric_type, "cold")
-        # one pruned scan lists the slices that actually hold the
-        # metric — only those partitions get rewritten
-        affected = [
-            r["date_slice"]
-            for r in df.filter(target).select("date_slice").distinct().collect()
-        ]
-        if not affected:
-            return rewritten
-        kept = df.filter(
-            F.col("date_slice").isin(affected)
-            & (F.col("tenant_bucket") == bucket)
-            & ~((F.col("tenant_id") == tenant_id) & (F.col("metric") == metric))
-        ).select(
-            "tenant_id", "metric", "ts", "value", "tags",
-            "ingest_seq", "date_slice", "tenant_bucket",
-        )
-        staging = self.base / "_staging" / f"delm_{metric_type}_cold"
-        kept.write.mode("overwrite").option("compression", "zstd").partitionBy(
-            "date_slice", "tenant_bucket"
-        ).parquet(str(staging))
-        for slice_start in affected:
-            part = f"date_slice={slice_start}/tenant_bucket={bucket}"
-            src, dst = staging / part, root / part
-            if src.exists():
-                self._swap_in(src, dst)
-            elif dst.exists():  # the metric was the bucket's only data
-                retired = root / f"_trash-{uuid.uuid4().hex}"
-                os.rename(dst, retired)
-                shutil.rmtree(retired, ignore_errors=True)
-            rewritten += 1
-        shutil.rmtree(staging, ignore_errors=True)
-        return rewritten
 
     # -- definition tables (metrics_idx / tenants) ---------------------------
 
@@ -1634,27 +1399,26 @@ class MetricsStore:
         return reader.parquet(str(path))
 
     def _table_save(self, key: str, df: DataFrame) -> None:
-        """Manifest-aware overwrite of a versioned side table (new
-        immutable version dir + CAS pointer swap; rename mode keeps the
-        two-rename publish)."""
+        """Overwrite a side table: one single-file write to staging, then
+        the protocol's publish — rename mode swaps it in with two
+        renames; manifest mode moves it to a new immutable version dir
+        and CAS-swaps the table's pointer."""
         self._assert_not_pinned("table save")
-        if self.manifest is not None:
-            staging = self.base / "_staging" / new_id("tbl")
-            df.coalesce(1).write.mode("overwrite").parquet(str(staging))
-            vdir = new_id("v")
-            dst = self.base / key / vdir
-            dst.parent.mkdir(parents=True, exist_ok=True)
-            os.rename(staging, dst)
-
-            def mutate(state: dict) -> dict:
-                state.setdefault("tables", {})[key] = vdir
-                return state
-
-            self.manifest.commit(mutate)
-            return
-        staging = self.base / "_staging" / key.replace("/", "_")
+        staging = self.base / "_staging" / new_id("tbl")
         df.coalesce(1).write.mode("overwrite").parquet(str(staging))
-        self._swap_in(staging, self.base / key)
+        if self.manifest is None:
+            self._swap_in(staging, self.base / key)
+            return
+        vdir = new_id("v")
+        dst = self.base / key / vdir
+        dst.parent.mkdir(parents=True, exist_ok=True)
+        os.rename(staging, dst)
+
+        def mutate(state: dict) -> dict:
+            state.setdefault("tables", {})[key] = vdir
+            return state
+
+        self.manifest.commit(mutate)
 
     def metrics_idx(self) -> DataFrame | None:
         return self._table_read("metrics_idx", METRICS_IDX_SCHEMA)
@@ -1699,16 +1463,10 @@ class MetricsStore:
         maintains metrics_expiration_idx as a table; here the maintenance
         pass materializes it so expiration queries don't rescan points).
         Returns the row count of the refreshed snapshot."""
-        df = self.expiration_index(metric_type)
-        key = f"expiration_idx/{metric_type}"
-        if self.manifest is not None:
-            self._table_save(key, df)
-            return self.expiration_index_snapshot(metric_type).count()
-        staging = self.base / "_staging" / f"expiration_idx_{metric_type}"
-        df.coalesce(1).write.mode("overwrite").parquet(str(staging))
-        target = self.base / "expiration_idx" / metric_type
-        self._swap_in(staging, target)
-        return self.spark.read.parquet(str(target)).count()
+        self._table_save(
+            f"expiration_idx/{metric_type}", self.expiration_index(metric_type)
+        )
+        return self.expiration_index_snapshot(metric_type).count()
 
     def expiration_index_snapshot(self, metric_type: str) -> DataFrame | None:
         """The last persisted expiration index, or None if maintenance has

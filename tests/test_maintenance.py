@@ -907,7 +907,8 @@ def test_attached_family_validates_alignment_and_refreshes(
     (a ValueError naming the alignment), and once a maintenance pass
     appends a newer slice to a path-attached sink, a request inside that
     slice is served from the partials with zero raw-point reads — the
-    pass advanced the watermark and re-resolved the sink's listing."""
+    pass advanced the watermark and re-resolved the sink's listing
+    (without re-inferring its schema)."""
     import pyspark.sql.functions as F
 
     from rhq_metrics_spark.model import Buckets
@@ -975,3 +976,17 @@ def test_attached_family_validates_alignment_and_refreshes(
     files = served.inputFiles()
     assert any(f"{tmp_path}/sink" in f for f in files), files
     assert not any("points" in f for f in files), files
+    # a path refresh re-reads the sink with the replaced frame's schema:
+    # no schema-inference job, only the watermark aggregation's 2 AQE
+    # query-stage jobs; the same schema and rows as an inferred read
+    sc = spark.sparkContext
+    group = f"path-refresh-{tmp_path.name}"
+    sc.setJobGroup(group, "refresh")
+    try:
+        assert svc._refresh(family, mt) == 3 * sm
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 2
+    got, want = svc._attached[(family, mt)].df, svc._read_partials(family, sink)
+    assert got.schema == want.schema
+    assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))

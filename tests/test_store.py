@@ -391,3 +391,180 @@ def test_arrow_and_spark_segment_writers_are_twins(spark, tmp_path, protocol):
         assert _point_rows(store.points("gauge")) == expected, name
     assert len(cold["spark"]) == 6
     assert all(rows == cold["spark"] for rows in cold.values())
+
+
+# -- maintenance ops on compacted (cold) data ----------------------------------
+
+_COLD_SLICES = (SLICE0, SLICE0 + TWO_HOURS_MS)          # compacted
+_HOT_SLICE = SLICE0 + 2 * TWO_HOURS_MS                  # left in L0
+
+
+def _bucket_mate(store, tenant):
+    """Another tenant id in ``tenant``'s bucket: a bucket-granular rewrite
+    must carry the mate's rows through."""
+    want = store._tenant_bucket_of(tenant)
+    return next(f"x{i}" for i in range(10_000) if store._tenant_bucket_of(f"x{i}") == want)
+
+
+def _seed_layers(spark, store):
+    """Three tenants (two sharing a bucket), metrics ``a``/``b``, rows
+    in two compacted slices plus one open slice, and hot overrides of
+    some compacted keys.  Returns the ``{"hot", "cold"}`` dict model of
+    what each layer holds, keyed (tenant, metric, ts)."""
+    mate = _bucket_mate(store, "t1")
+    tenants = ("t1", mate, "zz")
+    first = {
+        (t, m, s + k * 600_000 + j): float(i * 100 + k * 10 + j)
+        for i, t in enumerate(tenants)
+        for m in ("a", "b")
+        for s in _COLD_SLICES
+        for k in range(6)
+        for j in (0, 1)
+    }
+    store.add_data_points("gauge", _gauge(spark, [(*key, v) for key, v in first.items()]))
+    assert store.compact("gauge", closed_before_ms=_HOT_SLICE) == list(_COLD_SLICES)
+    hot = {(t, "a", SLICE0 + 600_000): -1.0 for t in tenants}  # overrides
+    hot.update({(t, m, _HOT_SLICE + k): float(k) for t in tenants
+                for m in ("a", "b") for k in range(3)})
+    store.add_data_points("gauge", _gauge(spark, [(*key, v) for key, v in hot.items()]))
+    return {"hot": hot, "cold": first}
+
+
+def _visible(model):
+    return {**model["cold"], **model["hot"]}
+
+
+def _drop(model, pred, layers=("hot", "cold")):
+    for layer in layers:
+        model[layer] = {k: v for k, v in model[layer].items() if not pred(k)}
+
+
+def _reopened(spark, store):
+    """A fresh store on the same path: it reads the on-disk state."""
+    return MetricsStore(spark, str(store.base),
+                        commit_protocol="rename" if store.manifest is None else "manifest")
+
+
+def _stored(spark, store):
+    return {(r["tenant_id"], r["metric"], r["ts"]): r["value"]
+            for r in _reopened(spark, store).points("gauge").collect()}
+
+
+
+def _op_delete_metric_hot(spark, store, model):
+    store.delete_metric("gauge", "t1", "a")
+    _drop(model, lambda k: k[:2] == ("t1", "a"), ("hot",))
+
+
+def _op_delete_metric_cold(spark, store, model):
+    store.delete_metric("gauge", "t1", "a", include_cold=True)
+    _drop(model, lambda k: k[:2] == ("t1", "a"))
+
+
+def _op_delete_tenant(spark, store, model):
+    store.delete_tenant("t1")
+    _drop(model, lambda k: k[0] == "t1")
+
+
+def _op_row_retention(spark, store, model):
+    # t1/a keeps its rows from the second compacted slice's 3rd window on;
+    # every other series keeps only the open slice (the default cutoff)
+    cut_t1a = _COLD_SLICES[1] + 3 * 600_000
+    cutoffs = spark.createDataFrame(
+        [("t1", "a", cut_t1a)], "tenant_id string, metric string, cutoff_ms long")
+    store.apply_row_retention("gauge", cutoffs, default_cutoff_ms=_HOT_SLICE)
+    _drop(model, lambda k: k[2] < (cut_t1a if k[:2] == ("t1", "a") else _HOT_SLICE))
+
+
+def _op_retention(spark, store, model):
+    cutoff = _COLD_SLICES[1] + TWO_HOURS_MS // 2   # only the first slice is wholly old
+    assert store.apply_retention("gauge", cutoff) == [SLICE0]
+    _drop(model, lambda k: k[2] < _COLD_SLICES[1])
+
+
+@pytest.mark.parametrize("op", [
+    _op_delete_metric_hot, _op_delete_metric_cold, _op_delete_tenant,
+    _op_row_retention, _op_retention,
+], ids=lambda f: f.__name__[4:])
+def test_maintenance_ops_on_compacted_data_match_model(spark, store, op):
+    """Deletes and retention on compacted data keep exactly the rows a
+    plain per-layer dict model keeps; last-write-wins then merges the
+    layers (a hot-only metric delete uncovers the cold value again)."""
+    model = _seed_layers(spark, store)
+    assert _stored(spark, store) == _visible(model)
+    op(spark, store, model)
+    assert _stored(spark, store) == _visible(model)
+
+
+def test_rename_tenant_delete_keeps_bucket_mates_visible(spark, tmp_path):
+    """A tenant delete rewrites the deleted tenant's cold bucket dirs.
+    Other tenants in that bucket must stay visible to the SAME store
+    object, whose cold scan plan was cached before the delete: the
+    rewrite has to move the cold root's mtime, the key of that cache
+    (the session ignores missing files, so a stale plan would skip the
+    rewritten files without an error)."""
+    store = MetricsStore(spark, str(tmp_path / "store"), tenant_buckets=1)
+    rows = [(t, "m", T0 + i * 60_000, float(i)) for t in ("t1", "t2") for i in range(10)]
+    store.add_data_points("gauge", _gauge(spark, rows))
+    assert store.compact("gauge", closed_before_ms=SLICE0 + TWO_HOURS_MS) == [SLICE0]
+    assert store.points("gauge").count() == 20      # caches the cold plan
+    store.delete_tenant("t1")
+    t2 = store.points("gauge").filter("tenant_id = 't2'")
+    assert sorted(r["value"] for r in t2.collect()) == [float(i) for i in range(10)]
+    assert store.points("gauge").filter("tenant_id = 't1'").count() == 0
+
+
+def _cold_files(spark, store):
+    df = _reopened(spark, store)._read_layer("gauge", "cold")
+    return [] if df is None else sorted(df.inputFiles())
+
+
+def _op_compact_late(spark, store):
+    store.add_data_points("gauge", _gauge(spark, [("t1", "b", T0 + 7, 0.5)]))
+    store.compact("gauge", closed_before_ms=_HOT_SLICE)
+
+
+def _op_cold_row_retention(spark, store):
+    cutoffs = spark.createDataFrame(
+        [("t1", "a", T0 + 2 * 600_000)], "tenant_id string, metric string, cutoff_ms long")
+    store.apply_row_retention("gauge", cutoffs, default_cutoff_ms=0)
+
+
+def _op_cold_delete_metric(spark, store):
+    store.delete_metric("gauge", "t1", "a", include_cold=True)
+
+
+def _op_cold_delete_tenant(spark, store):
+    store.delete_tenant("t1")
+
+
+@pytest.mark.parametrize("op", [
+    _op_compact_late, _op_cold_row_retention, _op_cold_delete_metric,
+    _op_cold_delete_tenant,
+], ids=lambda f: f.__name__[4:])
+def test_cold_rewrites_keep_the_cold_layout(spark, store, op):
+    """Every op that writes cold files writes the compaction layout:
+    ZSTD column chunks, rows within each file sorted by (metric, ts) —
+    the order parquet min/max pruning of metric predicates relies on."""
+    import pyarrow.parquet as pq
+
+    mate = _bucket_mate(store, "t1")
+    # shuffled input: interleaved metrics and tenants, ts descending
+    rows = [(t, m, T0 + k * 600_000 + j, float(k))
+            for k in reversed(range(6)) for j in (1, 0)
+            for t in ("t1", mate) for m in ("b", "a")]
+    store.add_data_points("gauge", _gauge(spark, rows))
+    store.compact("gauge", closed_before_ms=_HOT_SLICE)
+    before = _cold_files(spark, store)
+    op(spark, store)
+    files = _cold_files(spark, store)
+    assert files and files != before       # the op rewrote cold files
+    for f in files:
+        pf = pq.ParquetFile(f.removeprefix("file:"))
+        meta = pf.metadata
+        codecs = {meta.row_group(g).column(c).compression
+                  for g in range(meta.num_row_groups) for c in range(meta.num_columns)}
+        assert codecs == {"ZSTD"}, (f, codecs)
+        t = pf.read(columns=["metric", "ts"])
+        keys = list(zip(t["metric"].to_pylist(), t["ts"].to_pylist()))
+        assert keys == sorted(keys), f
