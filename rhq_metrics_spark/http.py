@@ -624,12 +624,11 @@ class MetricsApp:
         if order not in ("asc", "desc"):
             raise BadRequest(f"Invalid order parameter: {order!r}")
         with api_errors():
-            df = self.service.find_data_points(
+            groups = self.service.raw_points_json(
                 metric_type, tenant, metric_id, start, end,
                 limit=limit, order=order,
                 distinct=qs.get("distinct", "").lower() == "true",
             )
-            groups = named_data_points_json(df)
         pts = groups[0]["data"] if groups else []
         if order == "desc":
             pts = sorted(pts, key=lambda p: -p["timestamp"])
@@ -1265,16 +1264,15 @@ class MetricsApp:
         start, end = self._range_params(metric_type, tenant, ids, params)
         with api_errors():
             if rate:
-                df = self.service.find_rate_data(
+                groups = named_data_points_json(self.service.find_rate_data(
                     metric_type, tenant, ids, start, end,
                     limit=limit, order=order,
-                )
+                ))
             else:
-                df = self.service.find_data_points(
+                groups = self.service.raw_points_json(
                     metric_type, tenant, ids, start, end,
                     limit=limit, order=order,
                 )
-            groups = named_data_points_json(df)
         if order == "desc":
             for g in groups:
                 g["data"].sort(key=lambda p: -p["timestamp"])

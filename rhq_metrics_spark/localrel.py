@@ -21,10 +21,18 @@ structs verbatim — verified for doubles by bit comparison).
 call shape used across this package (lists of tuples / Rows / dicts +
 a DDL string or StructType).  Anything it cannot convert falls back to
 the plain path — correctness never depends on the fast path.
+
+The reverse direction lives here too: :func:`read_parquet_bounded`
+reads parquet files on the driver with pyarrow — no Spark job — when
+they total at most :data:`LOCAL_READ_MAX_BYTES`, and returns ``None``
+otherwise so the caller takes its distributed path ("read bounded,
+else ``None``").  The BM25 / IVF serve metadata and the store's raw
+point reads share that one cap.
 """
 
 from __future__ import annotations
 
+import os
 from typing import Any, Sequence
 
 from pyspark.sql import DataFrame, Row, SparkSession
@@ -97,3 +105,32 @@ def local_df(
         return spark.createDataFrame(tbl, st)
     except Exception:  # noqa: BLE001 — exotic types take the slow path
         return spark.createDataFrame(rows, schema)
+
+
+#: the one byte cap for driver-side reads: files totalling more than
+#: this are left to Spark.  The reads under it are serve-path metadata
+#: (BM25 stats and dfreq slices, IVF centroids and codebooks) and one
+#: series' raw points over a bounded range; the cap only guards against
+#: a store that has outgrown that contract.
+LOCAL_READ_MAX_BYTES = 64 * 1024 * 1024
+
+
+def read_parquet_bounded(files: Sequence, columns=None, filter=None):
+    """Read ``files`` with pyarrow on the driver — one ``pyarrow.Table``
+    per file, ``columns`` projected and ``filter`` (a
+    ``pyarrow.compute`` expression, or a callable giving one file's
+    expression) pushed down to the row groups — or return ``None`` when
+    the files total more than :data:`LOCAL_READ_MAX_BYTES`.  A file
+    that vanished raises ``FileNotFoundError``: the caller knows
+    whether to re-list or to fall back."""
+    import pyarrow.parquet as pq
+
+    if sum(os.path.getsize(f) for f in files) > LOCAL_READ_MAX_BYTES:
+        return None
+    return [
+        pq.read_table(
+            str(f), columns=columns,
+            filters=filter(f) if callable(filter) else filter,
+        )
+        for f in files
+    ]

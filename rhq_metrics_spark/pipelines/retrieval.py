@@ -37,7 +37,7 @@ from collections.abc import Sequence
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Window
 
-from rhq_metrics_spark.localrel import local_df
+from rhq_metrics_spark.localrel import local_df, read_parquet_bounded
 
 PPM = 1_000_000
 
@@ -733,26 +733,19 @@ def _source_paths(path: str, sources: Sequence[str]) -> list[str]:
     return [path if s == "" else f"{path}/{s}" for s in sources]
 
 
-#: driver-side metadata reads bail out above this many component bytes
-#: and fall back to a Spark job — the components this path reads are
-#: tiny by contract (one stats row per source, the query terms' dfreq
-#: slices, the broadcast-bounded tombstone list), so the cap only
-#: guards against a store that has outgrown the contract.
-_LOCAL_READ_MAX_BYTES = 64 * 1024 * 1024
-
-
 def _local_component_rows(
     dirs: Sequence[str],
     columns: Sequence[str],
     require_bases: Sequence[str] = (),
 ) -> list[dict] | None:
     """Driver-side read of TINY parquet components via pyarrow — no
-    Spark job, no executor round trip (r16 opt, guide §5: serve-path
-    metadata latency was dominated by job scheduling, not bytes).  The
-    BM25 store contract is already posix-local (the manifest log runs
-    on ``PosixBackend``), so a plain filesystem read is the same
-    deployment assumption; non-posix URIs, oversized components, or a
-    missing pyarrow return ``None`` and the caller falls back to the
+    Spark job, no executor round trip (serve-path metadata latency was
+    dominated by job scheduling, not bytes).  The BM25 store contract
+    is already posix-local (the manifest log runs on ``PosixBackend``),
+    so a plain filesystem read is the same deployment assumption;
+    non-posix URIs, components over the shared driver-read cap
+    (:func:`rhq_metrics_spark.localrel.read_parquet_bounded`) or
+    unreadable files return ``None`` and the caller falls back to the
     Spark read (which also owns the rename-swap retry semantics).
 
     ``require_bases``: each listed directory must EXIST or the read
@@ -763,10 +756,6 @@ def _local_component_rows(
     import glob as _glob
     import os as _os
 
-    try:
-        import pyarrow.parquet as _pq
-    except ImportError:  # pragma: no cover — pyarrow ships with pyspark
-        return None
     local_dirs = []
     for d in dirs:
         p = _strip_file_scheme(d)
@@ -783,17 +772,15 @@ def _local_component_rows(
         for f in sorted(_glob.glob(_os.path.join(d, "*.parquet")))
     ]
     try:
-        if sum(_os.path.getsize(f) for f in files) > _LOCAL_READ_MAX_BYTES:
-            return None
-        rows: list[dict] = []
-        for f in files:
-            rows.extend(_pq.read_table(f, columns=list(columns)).to_pylist())
+        tables = read_parquet_bounded(files, columns=list(columns))
     except Exception:  # noqa: BLE001 — any unreadable component (OSError,
         # pyarrow ArrowInvalid/ArrowIOError on a truncated or corrupt part
         # file, e.g. a store copied non-atomically) falls back to the Spark
-        # path, which owns the retry semantics and fails loudly (ADVICE r16)
+        # path, which owns the retry semantics and fails loudly
         return None
-    return rows
+    if tables is None:
+        return None
+    return [row for t in tables for row in t.to_pylist()]
 
 
 def _read_stats_multi(spark, paths: Sequence[str]) -> DataFrame:

@@ -443,6 +443,33 @@ class MetricsService:
                 df = df.limit(limit)
         return df
 
+    def raw_points_json(
+        self,
+        metric_type: str,
+        tenant_id: str,
+        metric: str | list[str] | None,
+        start: int,
+        end: int,
+        limit: int = 0,
+        order: str = "asc",
+        distinct: bool = False,
+    ) -> list[dict]:
+        """The REST raw read: :func:`named_data_points_json` of
+        :meth:`find_data_points`, points ascending within each metric.
+        A bounded read runs on the driver
+        (:meth:`MetricsStore.read_points_local`, no Spark job);
+        ``distinct`` or a read over the driver cap takes the Spark
+        path."""
+        table = None if distinct else self.store.read_points_local(
+            metric_type, tenant_id, metric, start, end
+        )
+        if table is not None:
+            return _arrow_points_json(table, limit, order)
+        return named_data_points_json(self.find_data_points(
+            metric_type, tenant_id, metric, start, end,
+            limit=limit, order=order, distinct=distinct,
+        ))
+
     def find_data_points_by_tags(
         self,
         metric_type: str,
@@ -2774,18 +2801,45 @@ def availability_points_json(df: DataFrame) -> list[dict]:
     return [_availability_point_dict(row.asDict()) for row in rows]
 
 
-def named_data_points_json(df: DataFrame) -> list[dict]:
+def _named_points(rows) -> list[dict]:
     """NamedDataPoint streaming-result shape: one entry per metric with
-    its points in order (NamedDataPointObserver / S8)."""
+    its points in order (NamedDataPointObserver / S8).  ``rows`` are
+    (metric, ts, value, tags) tuples sorted by (metric, ts); both raw
+    read paths (Spark rows, Arrow columns) build the JSON here."""
     by_metric: dict[str, list[dict]] = {}
-    for row in df.orderBy("metric", "ts").toLocalIterator():
-        d = row.asDict()
-        point = {"timestamp": d["ts"]}
-        if "rate" in d:
-            point["value"] = d["rate"]
-        else:
-            point["value"] = d.get("value")
-            if d.get("tags"):
-                point["tags"] = dict(d["tags"])
-        by_metric.setdefault(d["metric"], []).append(point)
+    for metric, ts, value, tags in rows:
+        point = {"timestamp": ts, "value": value}
+        if tags:
+            point["tags"] = dict(tags)
+        by_metric.setdefault(metric, []).append(point)
     return [{"id": m, "data": pts} for m, pts in by_metric.items()]
+
+
+def named_data_points_json(df: DataFrame) -> list[dict]:
+    """:func:`_named_points` of a raw-point or rate frame: one collect,
+    sorted on the driver (the JSON holds every point anyway)."""
+    rows = sorted(df.collect(), key=lambda r: (r["metric"], r["ts"]))
+    if "rate" in df.columns:
+        return _named_points((r["metric"], r["ts"], r["rate"], None) for r in rows)
+    return _named_points(
+        (r["metric"], r["ts"], r["value"], r["tags"]) for r in rows
+    )
+
+
+def _arrow_points_json(table, limit: int, order: str) -> list[dict]:
+    """:func:`named_data_points_json` of a
+    :meth:`MetricsStore.read_points_local` table (sorted by
+    (metric, ts)), with ``find_data_points``' ``limit`` applied: the
+    first ``limit`` points in ``order`` by ts across all metrics."""
+    import numpy as np
+    import pyarrow.compute as pc
+
+    if limit and limit > 0 and table.num_rows > limit:
+        idx = pc.sort_indices(table, sort_keys=[
+            ("ts", "ascending" if order == "asc" else "descending"),
+            ("metric", "ascending"),
+        ])
+        table = table.take(np.sort(idx.to_numpy()[:limit]))
+    return _named_points(zip(*(
+        table[c].to_pylist() for c in ("metric", "ts", "value", "tags")
+    )))

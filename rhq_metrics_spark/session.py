@@ -15,6 +15,26 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _workers_import_package() -> bool:
+    """Whether a Python worker can import this package.  Spark starts
+    the worker daemon as ``python -m <module>`` in the driver's working
+    directory, with the driver's ``PYTHONPATH`` and the interpreter's
+    installed locations on its path; a package that a script only put
+    on its own ``sys.path`` is invisible there."""
+    import site
+
+    root = os.path.realpath(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    )
+    paths = [
+        os.getcwd(),
+        *os.environ.get("PYTHONPATH", "").split(os.pathsep),
+        *site.getsitepackages(),
+        site.getusersitepackages(),
+    ]
+    return any(p and os.path.realpath(p) == root for p in paths)
+
+
 def get_spark(
     app_name: str = "rhq-metrics-spark",
     master: str | None = None,
@@ -78,8 +98,8 @@ def get_spark(
         # each stock-daemon fork then pays the heavy imports on its
         # first Arrow batch (measured: 5.9-12.3 s/task of "time to
         # initialize Python workers" on post-kill 32-task stages).
-        # Per-executor daemon ⇒ cluster-correct at any core count.
-        .config("spark.python.daemon.module", "rhq_metrics_spark.pydaemon")
+        # Per-executor daemon ⇒ cluster-correct at any core count.  Set
+        # only where workers can import the package (see below).
         # Small dims (nation/region/metric definitions) broadcast freely.
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # Per-call Python call-site capture (PySpark 4 DataFrame
@@ -101,6 +121,12 @@ def get_spark(
         # of a per-request filter literal (ADVICE r8).
         .config("spark.sql.parser.escapedStringLiterals", "false")
     )
+    if _workers_import_package():
+        # a daemon module workers cannot import fails every Python stage;
+        # without it Spark's stock daemon serves them
+        builder = builder.config(
+            "spark.python.daemon.module", "rhq_metrics_spark.pydaemon"
+        )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()

@@ -51,7 +51,14 @@ Scale design:
   ``value``, Cassandra's documented cell tie-break.
 - reads union hot+cold and apply **last-write-wins per (tenant, metric,
   ts)** — the CQL-upsert semantics (DataAccessImpl.java:215-221) — via one
-  ``row_number`` window (S2/S3 merge+dedup collapses into this).
+  ``row_number`` window (S2/S3 merge+dedup collapses into this).  A raw
+  point read of one tenant's bounded range (the REST ``GET …/raw``, a
+  Cassandra partition-key lookup in the reference) has a driver-side
+  twin, :meth:`MetricsStore.read_points_local`: the same files, pruned
+  by slice and tenant bucket from one snapshot, read with pyarrow under
+  the shared driver-read cap (``localrel``), the same LWW rule in
+  Arrow — no Spark job; over the cap it returns ``None`` and the caller
+  runs the Spark scan.
 - publish layer, two protocols (``commit_protocol=``).  The protocol
   decides three things: how maintainers serialize, how live segments
   and slices are listed, and how a rewritten slice is published.
@@ -496,10 +503,16 @@ class MetricsStore:
     def _seg_meta(self, segdir: Path) -> dict:
         """Sidecar of a hot segment.  The sidecar is written before the
         atomic publish rename so it is always present; the fallback scan
-        (one tiny columnar job) covers hand-built or damaged stores."""
+        (one tiny columnar job) covers hand-built or damaged stores.  A
+        segment retired since it was listed raises
+        ``FileNotFoundError``."""
         try:
             return json.loads((segdir / SEG_SIDECAR).read_text())
         except (OSError, ValueError):
+            if not segdir.is_dir():
+                # retired between a listing and this read: the caller
+                # re-lists
+                raise FileNotFoundError(str(segdir)) from None
             rows = (
                 self.spark.read.parquet(str(segdir))
                 .select("date_slice", "tenant_bucket")
@@ -598,12 +611,11 @@ class MetricsStore:
 
             last_exc: Exception | None = None
             for _attempt in range(3):
-                # the WHOLE per-attempt body sits inside the try (ADVICE
-                # r14): for slice-filtered reads, _seg_meta on a segment
-                # retired between listing and sidecar read falls back to
-                # spark.read.parquet on the vanished dir — the same
-                # PATH_NOT_FOUND race as the plan-time resolution, so it
-                # must trigger the same re-list
+                # the WHOLE per-attempt body sits inside the try: for
+                # slice-filtered reads, _seg_meta on a segment retired
+                # between listing and sidecar read raises
+                # FileNotFoundError — the same race as the plan-time
+                # PATH_NOT_FOUND, so it triggers the same re-list
                 try:
                     segs = self._hot_segments(metric_type)
                     if slices is not None:
@@ -621,6 +633,9 @@ class MetricsStore:
                         df = self._read_segment_paths(metric_type, segs)
                         if df is not None:
                             self._cache_put(key, df)
+                except FileNotFoundError as exc:
+                    last_exc = exc
+                    continue
                 except AnalysisException as exc:
                     if "PATH_NOT_FOUND" not in str(exc):
                         raise
@@ -680,22 +695,9 @@ class MetricsStore:
         )
         root = self._points_path(metric_type, layer)
         if layer == "hot":
-            # A segment is LIVE only for the slices that still reference
-            # it: compaction/rewrites retire a segment slice-by-slice, so
-            # a straddling segment can physically hold rows for a slice
-            # that has since been folded into cold (or row-deleted).
-            # Reading those dead rows back would resurrect them — group
-            # segments by live-slice set and filter each group exactly.
-            seg_live: dict[str, set[int]] = {}
-            for s, segs in entry.items():
-                if self._want_slice(int(s), slices):
-                    for seg in segs:
-                        seg_live.setdefault(seg, set()).add(int(s))
-            if not seg_live:
+            groups = self._live_segment_groups(entry, slices)
+            if not groups:
                 return None
-            groups: dict[frozenset, list[str]] = {}
-            for seg, live in seg_live.items():
-                groups.setdefault(frozenset(live), []).append(seg)
             out = None
             for live, segs in groups.items():
                 df = self._read_segment_paths(
@@ -722,6 +724,27 @@ class MetricsStore:
             .parquet(*paths)
         )
         return df.withColumn("_layer_seq", F.lit(-1).cast("long"))
+
+    def _live_segment_groups(
+        self, entry: dict, slices
+    ) -> dict[frozenset, list[str]]:
+        """Manifest mode: the hot segments of snapshot ``entry`` that
+        hold a wanted slice, grouped by their set of live wanted slices.
+        A segment is LIVE only for the slices that still reference it:
+        compaction/rewrites retire a segment slice-by-slice, so a
+        straddling segment can physically hold rows for a slice that has
+        since been folded into cold (or row-deleted).  Reading those dead
+        rows back would resurrect them — readers filter each group to
+        its live slices."""
+        seg_live: dict[str, set[int]] = {}
+        for s, segs in entry.items():
+            if self._want_slice(int(s), slices):
+                for seg in segs:
+                    seg_live.setdefault(seg, set()).add(int(s))
+        groups: dict[frozenset, list[str]] = {}
+        for seg, live in seg_live.items():
+            groups.setdefault(frozenset(live), []).append(seg)
+        return groups
 
     def _merged_lww(
         self, metric_type: str, filter_fn=None, slices=None
@@ -775,6 +798,45 @@ class MetricsStore:
             .filter(F.col("_rn") == 1)
             .drop("_rn")
         )
+
+    @staticmethod
+    def _lww_arrow(table):
+        """:meth:`_lww` on a pyarrow Table of ONE tenant's rows: per
+        (metric, ts) keep the highest ``_layer_seq``, ties to the larger
+        value with nulls last and NaN above every number (Spark's double
+        order; Arrow would rank NaN with the nulls).  Returns the kept
+        rows sorted by (metric, ts)."""
+        import numpy as np
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        n = table.num_rows
+        if n == 0:
+            return table
+        value = table["value"]
+        keys = {"_vnull": pc.is_null(value)}
+        order = [("metric", "ascending"), ("ts", "ascending"),
+                 ("_layer_seq", "descending"), ("_vnull", "ascending")]
+        if pa.types.is_floating(value.type):
+            nan = pc.fill_null(pc.is_nan(value), False)
+            keys["_vnan"] = nan
+            keys["_v"] = pc.if_else(nan, None, value)
+            order += [("_vnan", "descending"), ("_v", "descending")]
+        else:
+            keys["_v"] = value
+            order.append(("_v", "descending"))
+        ranked = table.select(["metric", "ts", "_layer_seq"])
+        for name, col in keys.items():
+            ranked = ranked.append_column(name, col)
+        idx = pc.sort_indices(ranked, sort_keys=order, null_placement="at_end")
+        out = table.take(idx)
+        ts = out["ts"].to_numpy()
+        metric = out["metric"].combine_chunks()
+        first = np.ones(n, dtype=bool)
+        first[1:] = (ts[1:] != ts[:-1]) | pc.not_equal(
+            metric.slice(1), metric.slice(0, n - 1)
+        ).to_numpy(zero_copy_only=False)
+        return out.filter(pa.array(first))
 
     def state_token(self, metric_type: str):
         """Cheap, hashable token that changes whenever a read of
@@ -864,6 +926,119 @@ class MetricsStore:
                 F.col("ts").asc() if order == "asc" else F.col("ts").desc()
             )
         return df.limit(limit) if limit and limit > 0 else df
+
+    def read_points_local(
+        self,
+        metric_type: str,
+        tenant_id: str,
+        metric: str | list[str] | None,
+        start: int,
+        end: int,
+    ):
+        """Driver-side twin of :meth:`find_data_points` (unordered,
+        unlimited): the same rows as a ``pyarrow.Table`` of
+        (tenant_id, metric, ts, value, tags) sorted by (metric, ts),
+        read with pyarrow — no Spark job.  It reads the files the Spark
+        scan would, resolved from one snapshot (``as_of`` pins hold) and
+        pruned by slice and tenant bucket, pushes the tenant, metric and
+        ``[start, end)`` filters down to the row groups and applies
+        :meth:`_lww_arrow`.
+
+        Returns ``None`` — the caller takes the Spark path — when the
+        pruned files exceed the shared driver-read cap
+        (:data:`rhq_metrics_spark.localrel.LOCAL_READ_MAX_BYTES`), or when
+        three listings in a row raced a rename-mode rewrite (a file
+        retired between listing and read).  Never a partial answer."""
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        from rhq_metrics_spark.localrel import read_parquet_bounded
+
+        first_slice = (start // self.slice_ms) * self.slice_ms
+        bucket = self._tenant_bucket_of(tenant_id)
+        pred = (
+            (pc.field("tenant_id") == tenant_id)
+            & (pc.field("ts") >= start) & (pc.field("ts") < end)
+        )
+        if isinstance(metric, str):
+            pred &= pc.field("metric") == metric
+        elif metric is not None:
+            pred &= pc.field("metric").isin(pa.array(list(metric), pa.string()))
+        schema = arrow_point_schema(metric_type)
+        cols = schema.names
+        for _attempt in range(3):
+            try:
+                spec = self._local_files(metric_type, bucket, (first_slice, end))
+                tables = read_parquet_bounded(
+                    list(spec), cols + ["ingest_seq"],
+                    lambda f: pred if spec[f][1] is None
+                    else pred & pc.field("date_slice").isin(sorted(spec[f][1])),
+                )
+            except FileNotFoundError:
+                continue
+            if tables is None:
+                return None
+            out = [
+                t.select(cols).cast(schema).append_column(
+                    "_layer_seq",
+                    t["ingest_seq"].cast(pa.int64()) if spec[f][0]
+                    else pa.array([-1] * t.num_rows, pa.int64()),
+                )
+                for f, t in zip(spec, tables)
+            ]
+            if not out:
+                return schema.empty_table()
+            return self._lww_arrow(pa.concat_tables(out)).select(cols)
+        return None
+
+    def _local_files(
+        self, metric_type: str, bucket: int, slices: tuple
+    ) -> dict[Path, tuple[bool, frozenset | None]]:
+        """The files :meth:`read_points_local` reads, each mapped to
+        ``(hot, live)``: ``hot`` files keep their ``ingest_seq``, cold
+        ones rank -1; ``live`` (manifest-mode hot only) is the slice set
+        the file's rows are filtered to.  A rename-mode cold dir with a
+        ``_trash-`` entry is inside a :meth:`_swap_in` (between its
+        renames, or before the trash is dropped) and raises
+        ``FileNotFoundError``, as a retired file does."""
+        hot_root = self._points_path(metric_type, "hot")
+        cold_root = self._points_path(metric_type, "cold")
+        out: dict[Path, tuple[bool, frozenset | None]] = {}
+
+        def add(d: Path, hot: bool, live=None) -> None:
+            for f in sorted(d.glob("*.parquet")):
+                out[f] = (hot, live)
+
+        if self.manifest is not None:
+            snap = self._read_snap().get("points", {}).get(metric_type, {})
+            groups = self._live_segment_groups(snap.get("hot", {}), slices)
+            for live, segs in groups.items():
+                for seg in segs:
+                    add(hot_root / seg, True, live)
+            for s, vdir in snap.get("cold", {}).items():
+                if self._want_slice(int(s), slices):
+                    add(cold_root / f"s-{s}" / vdir / f"_tb={bucket}", False)
+            return out
+        for seg in self._hot_segments(metric_type):
+            meta = self._seg_meta(seg)
+            if bucket in meta.get("buckets", [bucket]) and any(
+                self._want_slice(x, slices) for x in meta["slices"]
+            ):
+                add(seg, True)
+
+        def listing(d: Path) -> list[str]:
+            names = os.listdir(d) if d.is_dir() else []
+            if any(n.startswith("_trash-") for n in names):
+                raise FileNotFoundError(f"{d} is mid-swap")
+            return names
+
+        for name in listing(cold_root):
+            if name.startswith("date_slice=") and self._want_slice(
+                int(name.split("=", 1)[1]), slices
+            ):
+                if f"tenant_bucket={bucket}" in listing(cold_root / name):
+                    add(cold_root / name / f"tenant_bucket={bucket}", False)
+        return out
 
     def _tenant_bucket_of(self, tenant_id: str) -> int:
         """Driver-side twin of the ``pmod(xxhash64(tenant_id), buckets)``
@@ -1213,7 +1388,9 @@ class MetricsStore:
         segment (:meth:`_replace_segments`); cold: the affected slices
         (only their ``bucket`` dir, if given) go through
         :meth:`_write_cold`, then each partition is swapped in, or
-        retired when none of its rows survive."""
+        retired when none of its rows survive (and its slice dir with
+        it once no bucket is left, so :meth:`cold_slices` agrees with
+        manifest mode)."""
         if not affected:
             return []
         if self.manifest is not None:
@@ -1249,6 +1426,9 @@ class MetricsStore:
                 self._swap_in(staging / part, root / part)
             elif (root / part).exists():  # no row of the partition survived
                 self._retire(root / part)
+                slice_dir = root / f"date_slice={s}"
+                if bucket is not None and not any(slice_dir.iterdir()):
+                    self._retire(slice_dir)  # its last bucket went
         shutil.rmtree(staging, ignore_errors=True)
         return sorted(want)
 

@@ -165,6 +165,33 @@ def test_single_metric_post_and_desc_limit(app):
     assert [p["timestamp"] for p in got] == [3, 2]
 
 
+def test_raw_get_runs_no_spark_job_and_matches_the_spark_path(app, monkeypatch):
+    """GET …/raw of a bounded series is read on the driver: no Spark job,
+    and the same JSON bytes as the Spark path (forced by making the
+    driver-side read decline)."""
+    pts = [{"timestamp": t, "value": float(t % 7), "tags": {"t": str(t)}}
+           for t in range(0, 40, 3)]
+    assert call(app, "POST", f"{P}/gauges/m-jobs/raw", body=pts)[0] == 200
+    assert call(app, "POST", f"{P}/gauges/m-jobs/raw",
+                body=[{"timestamp": 9, "value": -1.0}])[0] == 200
+    sc = app.service.spark.sparkContext
+    queries = [f"{P}/gauges/m-jobs/raw?start=0&end=100",
+               f"{P}/gauges/m-jobs/raw?start=2&end=30&limit=4",
+               f"{P}/gauges/m-jobs/raw?start=0&end=100&limit=3&order=asc"]
+    fast = []
+    for i, q in enumerate(queries):
+        sc.setJobGroup(f"raw-get-{i}", "raw GET")
+        fast.append(call(app, "GET", q))
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        assert list(sc.statusTracker().getJobIdsForGroup(f"raw-get-{i}")) == []
+    sc.setJobGroup("other", "other")
+    assert fast[0][1][3] == {"timestamp": 9, "value": -1.0}
+    assert [p["timestamp"] for p in fast[1][1]] == [27, 24, 21, 18]
+    monkeypatch.setattr(app.service.store, "read_points_local", lambda *a: None)
+    for q, got in zip(queries, fast):
+        assert json.dumps(call(app, "GET", q)) == json.dumps(got), q
+
+
 def test_malformed_ingest_payload_is_400(app):
     code, body = call(app, "POST", f"{P}/gauges/raw", body=[{"noid": True}])
     assert code == 400 and "Invalid metric payload" in body["errorMsg"]
@@ -761,6 +788,26 @@ def test_raw_query_multi_metric(mm_app):
     code, ag = call(mm_app, "POST", f"{P}/availability/raw/query",
                     {"ids": ["a1"], "start": 0, "end": 240_000})
     assert code == 200 and ag[0]["data"][0]["value"] in ("up", "down")
+
+
+def test_raw_queries_match_the_spark_path(mm_app, monkeypatch):
+    """POST …/raw/query and GET …/tags/{tags}/raw read on the driver and
+    give the JSON bytes of the Spark path."""
+    reqs = [
+        ("POST", f"{P}/gauges/raw/query",
+         {"ids": ["m1", "m2", "mt"], "start": 0, "end": 240_000}),
+        ("POST", f"{P}/gauges/raw/query",
+         {"ids": ["m1"], "start": 0, "end": 240_000, "limit": 3}),
+        ("POST", f"{P}/availability/raw/query",
+         {"ids": ["a1"], "start": 0, "end": 240_000, "order": "desc"}),
+        ("GET", f"{P}/gauges/tags/dc:east/raw?start=0&end=240000", None),
+        ("GET", f"{P}/gauges/mt/raw?start=0&end=10000", None),
+    ]
+    fast = [call(mm_app, m, path, body) for m, path, body in reqs]
+    monkeypatch.setattr(mm_app.service.store, "read_points_local", lambda *a: None)
+    for (m, path, body), got in zip(reqs, fast):
+        assert got[0] == 200
+        assert json.dumps(call(mm_app, m, path, body)) == json.dumps(got), path
 
 
 def test_rate_query_multi_metric(mm_app):

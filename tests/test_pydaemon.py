@@ -79,3 +79,30 @@ def test_pydaemon_pins_blas_threads_before_fork():
         check=True, capture_output=True, text=True, cwd=_REPO,
     ).stdout
     assert out.strip() == "['1', '3', '1']"
+
+
+def test_sys_path_only_script_runs_python_stages(tmp_path):
+    # A script that puts the package only on its own sys.path (no
+    # PYTHONPATH, not installed, started from another directory): the
+    # workers could not import the preloading daemon, so the session
+    # keeps Spark's stock daemon and a Python UDF stage runs.
+    script = tmp_path / "udf_stage.py"
+    script.write_text(
+        "import sys\n"
+        f"sys.path.insert(0, {_REPO!r})\n"
+        "import pyspark.sql.functions as F\n"
+        "from rhq_metrics_spark.session import get_spark\n"
+        "spark = get_spark(master='local[1]', shuffle_partitions=1)\n"
+        "print(spark.conf.get('spark.python.daemon.module', 'default'))\n"
+        "plus = F.udf(lambda x: x + 1, 'long')\n"
+        "print(sum(r[0] for r in spark.range(5).select(plus('id')).collect()))\n"
+        "spark.stop()\n"
+    )
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env["SPARK_DRIVER_MEMORY"] = "512m"
+    out = subprocess.run(
+        [sys.executable, str(script)], env=env, cwd=tmp_path,
+        capture_output=True, text=True, timeout=300,
+    )
+    assert out.returncode == 0, out.stderr[-2000:]
+    assert out.stdout.split() == ["default", "15"]

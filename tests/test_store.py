@@ -568,3 +568,194 @@ def test_cold_rewrites_keep_the_cold_layout(spark, store, op):
         t = pf.read(columns=["metric", "ts"])
         keys = list(zip(t["metric"].to_pylist(), t["ts"].to_pylist()))
         assert keys == sorted(keys), f
+
+
+def test_emptied_cold_slice_is_retired_under_both_protocols(spark, tmp_path):
+    """A tenant delete that empties a compacted slice's only bucket dir
+    takes the slice with it: rename mode lists the same cold slices as
+    manifest mode (the raw reader lists these dirs)."""
+    got = {}
+    for protocol in ("rename", "manifest"):
+        store = MetricsStore(spark, str(tmp_path / protocol), tenant_buckets=1,
+                             commit_protocol=protocol)
+        store.add_data_points("gauge", _gauge(spark, [
+            ("t1", "m", T0, 1.0), ("t2", "m", T0 + TWO_HOURS_MS, 2.0),
+        ]))
+        store.compact("gauge", closed_before_ms=SLICE0 + 2 * TWO_HOURS_MS)
+        store.delete_tenant("t1")
+        got[protocol] = store.cold_slices("gauge")
+        assert [r["value"] for r in store.points("gauge").collect()] == [2.0]
+    assert got["rename"] == got["manifest"] == [SLICE0 + TWO_HOURS_MS]
+
+
+# -- the driver-side raw read (read_points_local) ------------------------------
+
+_S2 = SLICE0 + 2 * TWO_HOURS_MS                # left hot; S0, S1 compacted
+_RAW_DDL = ("tenant_id string, metric string, ts long, value double, "
+            "tags map<string,string>")
+_NAN, _INF = float("nan"), float("inf")
+# one batch, so one seq per key: the tie breaks by value, nulls last,
+# NaN above every number
+_SAME_SEQ = {
+    _S2 + 11: [None, _NAN, 5.0],
+    _S2 + 12: [None, 3.0],
+    _S2 + 13: [None],
+    _S2 + 14: [_INF, _NAN],
+    _S2 + 15: [-_INF, None],
+}
+
+
+@pytest.fixture(scope="module", params=["rename", "manifest"])
+def raw_store(spark, tmp_path_factory, request):
+    """t1 (metrics m, n), a bucket mate and a tenant in the other bucket,
+    over two compacted slices and one open slice.  An L0 segment
+    straddles all three (manifest mode keeps it live for the open slice
+    only); later batches re-post compacted timestamps, and one batch
+    holds same-seq duplicates with null and NaN values."""
+    from rhq_metrics_spark.service import MetricsService
+
+    store = MetricsStore(
+        spark, str(tmp_path_factory.mktemp(f"raw_{request.param}") / "store"),
+        tenant_buckets=2, commit_protocol=request.param,
+    )
+    mate = _bucket_mate(store, "t1")
+    other = next(f"y{i}" for i in range(10_000)
+                 if store._tenant_bucket_of(f"y{i}") != store._tenant_bucket_of("t1"))
+    rows = [
+        (t, m, s + k * 900_000 + (7 if m == "n" else 0), float(i * 100 + k),
+         {"k": str(k)} if k % 3 == 0 else None)
+        for i, t in enumerate(("t1", mate, other))
+        for m in ("m", "n")
+        for s in (SLICE0, SLICE0 + TWO_HOURS_MS, _S2)
+        for k in range(6)
+    ]
+    store.add_data_points("gauge", spark.createDataFrame(rows, _RAW_DDL))
+    assert store.compact("gauge", closed_before_ms=_S2) == [SLICE0, SLICE0 + TWO_HOURS_MS]
+    reposted = [("t1", "m", SLICE0 + k * 900_000, -float(k), {"re": "post"})
+                for k in (0, 2)] + [("t1", "m", _S2 + 5, 42.0)]
+    store.add_data_points("gauge", _arrow_gauge(reposted))
+    store.add_data_points("gauge", spark.createDataFrame(
+        [("t1", "m", ts, v, None) for ts, vals in _SAME_SEQ.items() for v in vals]
+        + [("t1", "m", SLICE0 + 900_000, None, None),
+           ("t1", "m", SLICE0 + 900_000, 8.0, {"a": "b"})],
+        _RAW_DDL,
+    ))
+    return MetricsService(spark, store), mate, other
+
+
+def _raw_twins(svc, tenant, metric, start, end, limit=0, order="asc"):
+    """(driver-side JSON, Spark-path JSON) of one raw read."""
+    import json
+
+    from rhq_metrics_spark.service import named_data_points_json
+
+    assert svc.store.read_points_local("gauge", tenant, metric, start, end) is not None
+    fast = svc.raw_points_json("gauge", tenant, metric, start, end, limit, order)
+    slow = named_data_points_json(
+        svc.find_data_points("gauge", tenant, metric, start, end, limit, order))
+    return json.dumps(fast), json.dumps(slow)
+
+
+_RAW_END = _S2 + TWO_HOURS_MS
+_RAW_CASES = {
+    "hot_only": ("t1", "m", _S2, _RAW_END),
+    "cold_only": ("t1", "n", SLICE0 + TWO_HOURS_MS, _S2),
+    "hot_cold_reposted": ("t1", "m", SLICE0, _RAW_END),
+    "multi_metric_unaligned": ("t1", ["m", "n"], SLICE0 + 1234, _S2 + 5000),
+    "every_metric": ("t1", None, SLICE0, _RAW_END),
+    "limit_asc": ("t1", "m", SLICE0, _RAW_END, 4, "asc"),
+    "limit_desc": ("t1", "m", SLICE0, _RAW_END, 4, "desc"),
+    "multi_limit_desc": ("t1", ["m", "n"], SLICE0, _RAW_END, 9, "desc"),
+    "empty_range": ("t1", "m", _RAW_END + TWO_HOURS_MS, _RAW_END + 2 * TWO_HOURS_MS),
+    "absent_metric": ("t1", "zz", SLICE0, _RAW_END),
+}
+
+
+def test_read_points_local_matches_find_data_points(raw_store):
+    """Every raw read gives JSON byte-identical to the Spark path."""
+    svc, mate, other = raw_store
+    cases = dict(_RAW_CASES)
+    cases["bucket_mate"] = (mate, "m", SLICE0, _RAW_END)
+    cases["other_bucket"] = (other, ["m", "n"], SLICE0, _RAW_END)
+    for name, args in cases.items():
+        fast, slow = _raw_twins(svc, *args)
+        assert fast == slow, name
+    assert _raw_twins(svc, *cases["empty_range"])[0] == "[]"
+    assert _raw_twins(svc, *cases["absent_metric"])[0] == "[]"
+    # the rule itself, not only agreement: LWW across layers and seqs
+    (group,) = svc.raw_points_json("gauge", "t1", "m", SLICE0, _RAW_END)
+    got = {p["timestamp"]: p for p in group["data"]}
+    assert got[SLICE0]["value"] == -0.0 and got[SLICE0]["tags"] == {"re": "post"}
+    assert got[SLICE0 + 900_000] == {"timestamp": SLICE0 + 900_000, "value": 8.0,
+                                     "tags": {"a": "b"}}
+    assert got[_S2 + 5]["value"] == 42.0
+    vals = [got[ts]["value"] for ts in sorted(_SAME_SEQ)]
+    assert vals[0] != vals[0] and vals[1] == 3.0 and vals[2] is None
+    assert vals[3] != vals[3] and vals[4] == -_INF
+
+
+def test_read_points_local_over_cap_takes_the_spark_path(raw_store, monkeypatch):
+    import json
+
+    import rhq_metrics_spark.localrel as L
+
+    svc, _, _ = raw_store
+    args = _RAW_CASES["hot_cold_reposted"]
+    want = json.dumps(svc.raw_points_json("gauge", *args))
+    monkeypatch.setattr(L, "LOCAL_READ_MAX_BYTES", 1000)
+    assert svc.store.read_points_local("gauge", *args) is None
+    assert json.dumps(svc.raw_points_json("gauge", *args)) == want
+
+
+def test_read_points_local_relists_when_a_file_is_retired(raw_store, monkeypatch):
+    """A compaction or rewrite can retire a file between the listing and
+    the read: the read re-lists; a listing that keeps naming a vanished
+    file gives None (the Spark path), never a partial answer."""
+    import json
+
+    svc, _, _ = raw_store
+    store = svc.store
+    args = _RAW_CASES["hot_cold_reposted"]
+    want = json.dumps(svc.raw_points_json("gauge", *args))
+    real = store._local_files
+    ghost = store.base / "points" / "gauge" / "hot" / "seg-ghost" / "part-0.parquet"
+    calls = {"n": 0}
+
+    def raced(*a):
+        calls["n"] += 1
+        files = real(*a)
+        return {**files, ghost: (True, None)} if calls["n"] == 1 else files
+
+    monkeypatch.setattr(store, "_local_files", raced)
+    assert json.dumps(svc.raw_points_json("gauge", *args)) == want
+    assert calls["n"] == 2
+    monkeypatch.setattr(store, "_local_files", lambda *a: {**real(*a), ghost: (True, None)})
+    assert store.read_points_local("gauge", *args) is None
+    assert json.dumps(svc.raw_points_json("gauge", *args)) == want
+    if store.manifest is None:
+        # a segment listed, then retired before its sidecar is read
+        seg_dir = ghost.parent
+        segs = store._hot_segments("gauge")
+        listings = iter([segs + [seg_dir]])
+        monkeypatch.setattr(store, "_local_files", real)
+        monkeypatch.setattr(store, "_hot_segments",
+                            lambda mt: next(listings, segs))
+        assert json.dumps(svc.raw_points_json("gauge", *args)) == want
+
+
+def test_read_points_local_honours_an_as_of_pin(spark, tmp_path):
+    import json
+
+    from rhq_metrics_spark.service import MetricsService
+
+    store = MetricsStore(spark, str(tmp_path / "store"), commit_protocol="manifest")
+    svc = MetricsService(spark, store)
+    store.add_data_points("gauge", _gauge(spark, [("t1", "m", T0 + i, float(i)) for i in range(5)]))
+    args = ("t1", "m", T0, T0 + 10)
+    pinned = store.snapshot_version()
+    before = json.dumps(svc.raw_points_json("gauge", *args))
+    store.add_data_points("gauge", _arrow_gauge([("t1", "m", T0 + 1, 9.0)]))
+    with store.as_of(pinned):
+        fast, slow = _raw_twins(svc, *args)
+    assert fast == slow == before
+    assert json.dumps(svc.raw_points_json("gauge", *args)) != before
